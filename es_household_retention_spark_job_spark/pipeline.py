@@ -105,7 +105,12 @@ def run_phase1(
 
     final = R.phase1(person, encounter, client_code, as_of, strategy=strategy)
     packed = R.pack_history(final)
-    upsert_parquet(spark, person_path, packed, key="person_id")
+    try:
+        upsert_parquet(spark, person_path, packed, key="person_id")
+    finally:
+        # R.phase1 caches this same eligible-persons plan; the cache
+        # manager matches by plan, so this releases its entry (no job)
+        persons.unpersist()
     log.info("phase1: wrote retention history for %d persons", n)
     return n
 

@@ -24,14 +24,19 @@ indexes follow the table at O(changes), never O(table)."""
 
 from __future__ import annotations
 
+import logging
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import dedup as _dedup
 from ..operators import search as _search
 from ..operators import similarity as _sim
 from ..sinks.upsert import CHANGE_TYPE_COL, current_version, read_changes
+
+log = logging.getLogger("retention.index_sync")
 
 __all__ = [
     "sync_text_index",
@@ -493,24 +498,39 @@ def sync_serving_stack(
     emb_id_col: str = "vec_id",
     route_maintenance: bool = False,
 ) -> dict:
-    """One window, the whole serving stack: run every structure's sync
-    against the table's change feed in DEPENDENCY order — the cluster
-    view consumes the near-dup band index's pairs, so that index must
-    absorb the window first; the text/ANN indexes are independent. Each
-    structure keeps its OWN exactly-once cursor (a crash mid-stack
-    leaves the completed syncs committed and the rest resuming from
-    their cursors on retry — there is deliberately no cross-structure
-    transaction: the structures are independent serving surfaces, and
-    holding one hostage to another's failure would couple their
-    availability). Returns {structure: its sync result}. Requesting
-    ``cluster_table`` without ``neardup_index`` raises — the dependency
-    is structural, not optional.
+    """One window, the whole serving stack: every requested structure's
+    sync runs against the table's change feed. Returns {structure: its
+    sync result}, keyed in the fixed order text, ann, neardup, clusters.
+    Requesting ``cluster_table`` without ``neardup_index`` raises — the
+    cluster view consumes the near-dup band index's pairs, so the
+    dependency is structural, not optional.
+
+    Lanes: the structures run in two dependency lanes, one driver thread
+    each — ``neardup → clusters`` (the critical path, submitted first)
+    and ``text → ann``. A window is a chain of small Spark jobs whose
+    driver gaps leave most cores idle; overlapping the independent lanes
+    fills them. Each lane thread starts through
+    ``pyspark.inheritable_thread_target`` with its own copy of the
+    caller's local properties, so every job the stack starts carries the
+    caller's job group, description and tags.
+
+    Failures: each structure keeps its OWN exactly-once cursor, and there
+    is deliberately no cross-structure transaction — the structures are
+    independent serving surfaces, and holding one hostage to another's
+    failure would couple their availability. A failed sync therefore
+    skips only what depends on it: a near-dup failure skips the cluster
+    sync, while a text failure still lets ann (and the other lane) run
+    and commit. Every failure is logged as it happens; once both lanes
+    finish, the first error is re-raised in lane order (neardup,
+    clusters, text, ann). The structures that failed or were skipped
+    resume from their cursors on the next call.
 
     ``route_maintenance=True`` sends each structure through
     ``maintain_index`` instead of its sync: the cost rule picks sync or
     rebuild PER STRUCTURE per window (round 13 — a sub-crossover corpus
     stops paying the sync floor stack-wide), with the table row count
-    counted ONCE and shared across the four pricings."""
+    counted ONCE, before the lanes start, and shared across the four
+    pricings."""
     if cluster_table is not None and neardup_index is None:
         raise ValueError(
             "sync_serving_stack: cluster_table requires neardup_index "
@@ -523,65 +543,62 @@ def sync_serving_stack(
         n_rows = (
             read_keyed_table(spark, table_path).select(id_col).count()
         )
+    text_kw = {"text_col": text_col, "id_col": id_col}
+    ann_kw = {"id_col": emb_id_col, "emb_col": emb_col}
+    # structure -> (index path, sync, extra positional args, keywords)
+    plan = {
+        "text": (text_index, sync_text_index, (), text_kw),
+        "ann": (ann_index, sync_ann_index, (), ann_kw),
+        "neardup": (neardup_index, sync_neardup_index, (), text_kw),
+        "clusters": (
+            cluster_table, sync_dedup_clusters, (neardup_index,), text_kw,
+        ),
+    }
+
+    def step(kind: str) -> dict:
+        path, sync, extra, kw = plan[kind]
+        if route_maintenance:
+            return maintain_index(
+                spark, kind, path, table_path, from_version=from_version,
+                n_rows=n_rows, neardup_index=neardup_index, **kw,
+            )
+        return sync(
+            spark, path, table_path, *extra, from_version=from_version, **kw
+        )
+
     out: dict = {}
-    if text_index is not None:
-        out["text"] = (
-            maintain_index(
-                spark, "text", text_index, table_path,
-                from_version=from_version, n_rows=n_rows,
-                text_col=text_col, id_col=id_col,
-            )
-            if route_maintenance
-            else sync_text_index(
-                spark, text_index, table_path,
-                from_version=from_version, text_col=text_col,
-                id_col=id_col,
-            )
-        )
-    if ann_index is not None:
-        out["ann"] = (
-            maintain_index(
-                spark, "ann", ann_index, table_path,
-                from_version=from_version, n_rows=n_rows,
-                id_col=emb_id_col, emb_col=emb_col,
-            )
-            if route_maintenance
-            else sync_ann_index(
-                spark, ann_index, table_path,
-                from_version=from_version, emb_col=emb_col,
-                id_col=emb_id_col,
-            )
-        )
-    if neardup_index is not None:
-        out["neardup"] = (
-            maintain_index(
-                spark, "neardup", neardup_index, table_path,
-                from_version=from_version, n_rows=n_rows,
-                text_col=text_col, id_col=id_col,
-            )
-            if route_maintenance
-            else sync_neardup_index(
-                spark, neardup_index, table_path,
-                from_version=from_version, text_col=text_col,
-                id_col=id_col,
-            )
-        )
-    if cluster_table is not None:
-        out["clusters"] = (
-            maintain_index(
-                spark, "clusters", cluster_table, table_path,
-                from_version=from_version, n_rows=n_rows,
-                neardup_index=neardup_index,
-                text_col=text_col, id_col=id_col,
-            )
-            if route_maintenance
-            else sync_dedup_clusters(
-                spark, cluster_table, table_path, neardup_index,
-                from_version=from_version, text_col=text_col,
-                id_col=id_col,
-            )
-        )
-    return out
+
+    def run_lane(lane: tuple[str, ...]) -> list[Exception]:
+        errors: list[Exception] = []
+        for kind in lane:
+            if kind == "clusters" and errors:
+                break  # its near-dup window failed: nothing to derive from
+            try:
+                out[kind] = step(kind)
+            except Exception as e:  # the first is re-raised, in lane order
+                log.error("sync_serving_stack: %s failed", kind, exc_info=e)
+                errors.append(e)
+        return errors
+
+    # the critical path (near-dup, then the clusters that wait on it)
+    # is submitted first
+    lanes = [
+        tuple(k for k in chain if plan[k][0] is not None)
+        for chain in (("neardup", "clusters"), ("text", "ann"))
+    ]
+    lanes = [lane for lane in lanes if lane]
+    if lanes:
+        with ThreadPoolExecutor(len(lanes)) as pool:
+            # wrapped per lane, in this thread: each lane gets its own
+            # copy of the caller's local properties
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(run_lane), lane)
+                for lane in lanes
+            ]
+            errors = [e for f in futures for e in f.result()]
+        if errors:
+            raise errors[0]
+    return {k: out[k] for k in plan if k in out}
 
 
 #: ladder-calibrated defaults for choose_maintenance, per structure:

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import math
 import os
+import warnings
 from datetime import date, datetime
 
 import duckdb
@@ -119,6 +120,50 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         if item.name in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+
+
+def _named_node_ids(config) -> list[str]:
+    """The node ids given on the command line (``path::name`` args),
+    rewritten relative to the rootdir — the form ``item.nodeid`` takes."""
+    out = []
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if not sep:
+            continue
+        full = (config.invocation_params.dir / path).resolve()
+        try:
+            out.append(f"{full.relative_to(config.rootpath).as_posix()}::{rest}")
+        except ValueError:
+            continue
+    return out
+
+
+def pytest_deselected(items):
+    """Warn when a test named explicitly by node id is dropped by the
+    ``-m "not slow"`` default: without the warning the run reports
+    "deselected" and exits as if the test did not exist."""
+    if not items:
+        return
+    config = items[0].config
+    named = _named_node_ids(config)
+    dropped = [
+        item.nodeid
+        for item in items
+        if item.get_closest_marker("slow")
+        and any(
+            item.nodeid == n or item.nodeid.startswith((n + "[", n + "::"))
+            for n in named
+        )
+    ]
+    if dropped:
+        warnings.warn(
+            pytest.PytestWarning(
+                f"{len(dropped)} test(s) named on the command line are in "
+                f"the slow tier and were deselected by "
+                f"-m {config.option.markexpr!r}: {', '.join(dropped)}. "
+                'Add -m "" to run them (or -m slow for the slow tier only).'
+            )
+        )
 
 
 @pytest.fixture(scope="session")

@@ -302,6 +302,32 @@ def test_incremental_single_publish(spark, tmp_path):
     ]
 
 
+def test_pipeline_leaves_no_cache_entry(spark, tmp_path):
+    """run_retention and run_incremental release every frame they cache:
+    the session's cache manager is empty after each returns, so a
+    long-lived session does not accumulate their store scans."""
+
+    def cache_empty():
+        return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    _, encounter = fixture_frames(spark)
+    base = encounter.where(F.col("admit_date") < SPLIT_MS)
+    delta = encounter.where(F.col("admit_date") >= SPLIT_MS)
+    p_path, e_path = _setup(spark, tmp_path, "cache", base, fresh=True)
+    spark.catalog.clearCache()
+    assert run_retention(
+        spark, p_path, e_path, FIXTURE_CLIENT, FIXTURE_AS_OF
+    )["phase1_persons"] > 0
+    assert cache_empty()
+    encounter.write.mode("overwrite").parquet(e_path)
+    spark.catalog.refreshByPath(e_path)
+    stats = run_incremental(
+        spark, p_path, e_path, delta, FIXTURE_CLIENT, FIXTURE_AS_OF
+    )
+    assert stats["affected_persons"] > 0
+    assert cache_empty()
+
+
 def test_flagship_loop_defaults_to_mor(spark, tmp_path, monkeypatch):
     """Round 12 (r11 verdict #7): the flagship maintenance loop is
     MoR-BY-DEFAULT — run_incremental's publish lands as per-bucket delta

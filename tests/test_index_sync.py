@@ -4,6 +4,8 @@ on the index manifest, rebuild-equality after every sync."""
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1105,4 +1107,149 @@ def test_serving_stack_route_maintenance(spark, tmp_path):
         for r in D.duplicate_clusters(
             D.minhash_lsh_pairs(resolved)
         ).collect()
+    )
+
+
+@pytest.fixture(scope="module")
+def small_stack(spark, tmp_path_factory):
+    """A 60-doc table carrying text AND an embedding, its four serving
+    structures built at v0, then one committed window of text mutations,
+    embedding flips, fresh docs and deletes. The syncs only read the
+    table, so tests share it and sync copies of the structures (see
+    ``_fresh_structures``). Returns (table, v0, structure paths)."""
+    from es_household_retention_spark_job_spark.operators import (
+        clusters as C,
+        dedup as D,
+    )
+    from es_household_retention_spark_job_spark.streaming.index_sync import (
+        cdc_stream_id,
+    )
+
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
+    embs = load_table(spark, SF_DIR, "embeddings").select(
+        F.col("vec_id").alias("doc_id"), "embedding"
+    )
+    combined = docs.join(embs, "doc_id").where(F.col("doc_id") < 60)
+    tmp_path = tmp_path_factory.mktemp("small_stack")
+    table = str(tmp_path / "table")
+    U.write_keyed_table(combined, table, key="doc_id", n_buckets=2)
+    v0 = U.current_version(table)
+    state = U.read_keyed_table(spark, table)
+    paths = {s: str(tmp_path / s) for s in ("text", "ann", "neardup", "clusters")}
+    SE.build_text_index(state, paths["text"])
+    S.build_ann_index(state, paths["ann"], n_cells=2, iters=2, id_col="doc_id")
+    D.build_neardup_index(state, paths["neardup"])
+    C.build_cluster_table(
+        state, paths["clusters"], epoch=v0, epoch_stream=cdc_stream_id(table)
+    )
+    U.upsert_parquet(
+        spark, table,
+        combined.where(F.col("doc_id") % 7 == 3)
+        .withColumn("text", F.concat(F.col("text"), F.lit(" zzlane zzlane")))
+        .unionByName(
+            combined.where(F.col("doc_id") % 11 == 5).withColumn(
+                "embedding", F.transform(F.col("embedding"), lambda x: -x)
+            )
+        )
+        .unionByName(
+            combined.where(F.col("doc_id") % 13 == 1).withColumn(
+                "doc_id", F.col("doc_id") + 700_000
+            )
+        ),
+        key="doc_id",
+    )
+    U.delete_keys(
+        spark, table,
+        combined.where(F.col("doc_id") % 17 == 8).select("doc_id"),
+        key="doc_id",
+    )
+    return table, v0, paths
+
+
+def _fresh_structures(pristine: dict, tmp_path) -> dict:
+    paths = {s: str(tmp_path / s) for s in pristine}
+    for s, src in pristine.items():
+        shutil.copytree(src, paths[s])
+    return paths
+
+
+def _stack(spark, table, paths, **kw):
+    from es_household_retention_spark_job_spark.streaming.index_sync import (
+        sync_serving_stack,
+    )
+
+    return sync_serving_stack(
+        spark, table,
+        text_index=paths["text"], ann_index=paths["ann"],
+        neardup_index=paths["neardup"], cluster_table=paths["clusters"],
+        emb_id_col="doc_id", **kw,
+    )
+
+
+def test_sync_serving_stack_lanes_keep_job_group(spark, tmp_path, small_stack):
+    """The two dependency lanes run on driver threads: every structure
+    lands on the table's current version, the result keeps the fixed
+    key order, and every job the call starts carries the caller's job
+    group (the lane threads inherit it)."""
+    table, v0, pristine = small_stack
+    paths = _fresh_structures(pristine, tmp_path)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("stack-lanes", "sync_serving_stack lanes")
+    try:
+        out = _stack(spark, table, paths, from_version=v0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    cur = U.current_version(table)
+    assert list(out) == ["text", "ann", "neardup", "clusters"]
+    assert all(r["to"] == cur for r in out.values())
+    assert out["text"]["upserted"] > 0 and out["ann"]["upserted"] > 0
+    assert tracker.getJobIdsForGroup("stack-lanes")
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
+def test_sync_serving_stack_text_failure_spares_other_structures(
+    spark, tmp_path, monkeypatch, small_stack
+):
+    """A text sync failure is re-raised after both lanes finish, and it
+    does not stop ann, neardup or clusters from committing their cursors
+    at the current version; the next call brings text up to date and
+    finds no-op windows everywhere else."""
+    from es_household_retention_spark_job_spark.operators import (
+        clusters as C,
+        dedup as D,
+    )
+    from es_household_retention_spark_job_spark.streaming import index_sync
+
+    table, v0, pristine = small_stack
+    paths = _fresh_structures(pristine, tmp_path)
+    stream = index_sync.cdc_stream_id(table)
+    cur = U.current_version(table)
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("text sync failed")
+
+    monkeypatch.setattr(index_sync, "sync_text_index", boom)
+    with pytest.raises(RuntimeError, match="text sync failed"):
+        _stack(spark, table, paths, from_version=v0)
+    assert index_sync._cursor(
+        S._read_ann_manifest(paths["ann"]), stream
+    ) == cur
+    assert index_sync._cursor(
+        D._read_neardup_meta(paths["neardup"]), stream
+    ) == cur
+    assert C.cluster_cursor(paths["clusters"], stream) == cur
+    assert index_sync._cursor(
+        SE._read_index_manifest(paths["text"]), stream
+    ) is None
+
+    monkeypatch.undo()
+    out = _stack(spark, table, paths, from_version=v0)
+    assert (out["text"]["from"], out["text"]["to"]) == (v0, cur)
+    assert out["text"]["upserted"] > 0
+    assert all(
+        out[k]["from"] == out[k]["to"] == cur
+        for k in ("ann", "neardup", "clusters")
     )
