@@ -31,6 +31,7 @@ import random
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import manifest as mf
 from ..functions import P31, eager_cache, ensure_parallelism, h60
 from .text import tokens, word_ngrams
 
@@ -745,6 +746,16 @@ def leakage_safe_split(
 NEARDUP_INDEX_BUCKETS = 64
 BAND_BUCKET_COL = "band_bucket"
 
+#: the band index's manifest: atomically replaced, it lists the live base
+#: generation, sync band files and tombstone ledger, version and CDC cursor
+NEARDUP_META = "_meta.json"
+
+
+def _band_bucket() -> Column:
+    """The band index's partition function over ``band_key`` — shared by
+    the index build and the probe, which must agree on it."""
+    return F.pmod(F.xxhash64("band_key"), F.lit(NEARDUP_INDEX_BUCKETS))
+
 
 def neardup_index_frame(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
@@ -755,10 +766,7 @@ def neardup_index_frame(
     bands = minhash_bands(
         shingle_sets(docs, text_col, id_col), id_col, gh_once=True
     )
-    return bands.withColumn(
-        BAND_BUCKET_COL,
-        F.pmod(F.xxhash64("band_key"), F.lit(NEARDUP_INDEX_BUCKETS)),
-    )
+    return bands.withColumn(BAND_BUCKET_COL, _band_bucket())
 
 
 def build_neardup_index(
@@ -809,9 +817,6 @@ def build_neardup_index(
     # ledger, and sync files serving untouched (review finding: base
     # overwrite before the meta write opened a window where the NEW base
     # served under the OLD ledger/sync generation)
-    from ..sinks.upsert import _publish_lock
-
-    old_meta = _read_neardup_meta(path) or {}
     base_dir = f"base-{_uuid.uuid4().hex[:8]}"
     # sortWithinPartitions(bucket, id): shuffle-free, clusters each
     # bucket file's row groups by doc id so the two-phase probe's
@@ -822,39 +827,34 @@ def build_neardup_index(
     ).write.mode("overwrite").partitionBy(BAND_BUCKET_COL).parquet(
         os.path.join(path, base_dir)
     )
-    # a rebuild IS this layout's physical purge: the fresh meta lists NO
-    # sync files and NO tombstones (explicit empty lists — without them
-    # the read path's legacy whole-dir fallback would serve the previous
-    # generation's ledger against the rebuilt corpus, keeping deleted-
-    # then-reinstated docs hidden); superseded files sweep AFTER commit.
-    # The version is MONOTONIC over the live meta, bumped under the
-    # publish lock (review finding: a reset to version 1 made the
-    # optimistic check blind to a rebuild that raced a maintenance op's
-    # plan→commit window — the racer would commit a meta pointing at the
-    # swept old base dir, destroying the index). The rebuild still wins
-    # by contract (it defines a new generation); the bump is what makes
-    # the LOSER abort loudly instead. The CDC cursor carries over when
-    # present — re-applying a window the rebuild already absorbed is
-    # idempotent (upsert semantics), while dropping it would wedge the
-    # sync loop behind a from_version= re-bootstrap.
-    new_meta = {
-        "id_col": id_col,
-        "text_col": text_col,
-        "base_dir": base_dir,
-        "sync": [],
-        "tombstones": [],
-    }
-    with _publish_lock(path) as lk:
-        # everything below — cursor carry, version bump, commit, sweep —
-        # reads the LIVE meta under the lock, never the pre-rewrite
-        # snapshot (review findings: a stale old_meta regressed a
-        # racing sync's committed cursor, and an unlocked post-commit
-        # sweep could rmtree a NEWER committed generation's base dir or
-        # a racer's just-committed sync/ledger files)
-        cur = _read_neardup_meta(path) or old_meta
-        for k in ("last_epoch", "epoch_stream"):
-            if k in cur:
-                new_meta[k] = cur[k]
+
+    def rebuilt(live: dict | None) -> dict:
+        # a rebuild IS this layout's physical purge: the fresh meta lists
+        # NO sync files and NO tombstones (explicit empty lists — without
+        # them the read path's legacy whole-dir fallback would serve the
+        # previous generation's ledger against the rebuilt corpus, keeping
+        # deleted-then-reinstated docs hidden). The commit bumps the
+        # version MONOTONICALLY over the live meta (review finding: a
+        # reset to version 1 made the optimistic check blind to a rebuild
+        # that raced a maintenance op's plan→commit window — the racer
+        # would commit a meta pointing at the swept old base dir,
+        # destroying the index); the rebuild still wins by contract, the
+        # bump makes the LOSER abort loudly instead. The CDC cursor
+        # carries over from the LIVE meta, read under the lock (review
+        # finding: a stale pre-lock read regressed a racing sync's
+        # committed cursor) — re-applying a window the rebuild already
+        # absorbed is idempotent, while dropping it would wedge the sync
+        # loop behind a from_version= re-bootstrap.
+        new_meta = mf.carry_epoch(
+            {
+                "id_col": id_col,
+                "text_col": text_col,
+                "base_dir": base_dir,
+                "sync": [],
+                "tombstones": [],
+            },
+            live or {},
+        )
         if as_of_epoch is not None:
             same_stream = epoch_stream is None or (
                 new_meta.get("epoch_stream") == epoch_stream
@@ -874,48 +874,48 @@ def build_neardup_index(
                 new_meta["last_epoch"] = int(as_of_epoch)
                 if epoch_stream is not None:
                     new_meta["epoch_stream"] = str(epoch_stream)
-        new_meta["version"] = int(cur.get("version", 0)) + 1
-        lk.verify_owned()
-        _write_neardup_meta(path, new_meta)
-        # sweep exactly what CUR referenced (now superseded): its base
-        # generation, and its listed sync/ledger files — not whole dirs,
-        # so a racer's staged-but-uncommitted files survive (its commit
-        # will then abort on the version bump and ITS strays age out
-        # below). A pre-meta legacy index has no listings: whole-dir
-        # sweep keeps its old rebuild-is-the-purge contract.
-        _shutil.rmtree(
-            os.path.join(path, cur.get("base_dir") or "base"),
-            ignore_errors=True,
-        )
-        if "tombstones" in cur or "sync" in cur:
-            for sub in ("sync", "tombstones"):
-                for f in cur.get(sub) or []:
-                    try:
-                        os.unlink(os.path.join(path, sub, f))
-                    except OSError:
-                        pass
-                try:  # drop the dir when nothing (e.g. a racer's
-                    os.rmdir(os.path.join(path, sub))  # stray) remains
-                except OSError:
-                    pass
-        else:
-            for sub in ("sync", "tombstones"):
-                _shutil.rmtree(os.path.join(path, sub), ignore_errors=True)
-        # stale generation dirs (crashed rebuilds, aborted racers) age
-        # out on the sink's GC grace clock — never swept fresh, because
-        # a dir that is not yet meta-pointed may belong to a rebuild
-        # that is about to take this lock
-        from ..sinks.upsert import _gc_grace_seconds
+        return new_meta
 
-        now = _time.time()
-        for d in os.listdir(path):
-            if d.startswith("base-") and d != base_dir:
-                p = os.path.join(path, d)
+    cur = mf.commit(path, NEARDUP_META, rebuilt) or {}
+    # sweep exactly what CUR — the live meta this commit replaced, read
+    # under the lock — referenced: its base generation, and its listed
+    # sync/ledger files — not whole dirs, so a racer's
+    # staged-but-uncommitted files survive (its commit aborts on the
+    # version bump and ITS strays age out below). A pre-meta legacy index
+    # has no listings: whole-dir sweep keeps its old rebuild-is-the-purge
+    # contract.
+    _shutil.rmtree(
+        os.path.join(path, cur.get("base_dir") or "base"),
+        ignore_errors=True,
+    )
+    if "tombstones" in cur or "sync" in cur:
+        for sub in ("sync", "tombstones"):
+            for f in cur.get(sub) or []:
                 try:
-                    if now - os.path.getmtime(p) >= _gc_grace_seconds():
-                        _shutil.rmtree(p, ignore_errors=True)
+                    os.unlink(os.path.join(path, sub, f))
                 except OSError:
                     pass
+            try:  # drop the dir when nothing (e.g. a racer's
+                os.rmdir(os.path.join(path, sub))  # stray) remains
+            except OSError:
+                pass
+    else:
+        for sub in ("sync", "tombstones"):
+            _shutil.rmtree(os.path.join(path, sub), ignore_errors=True)
+    # stale generation dirs (crashed rebuilds, aborted racers) age out on
+    # the sink's GC grace clock — never swept fresh, because a dir that is
+    # not yet meta-pointed may belong to a rebuild about to commit
+    from ..sinks.upsert import _gc_grace_seconds
+
+    now = _time.time()
+    for d in os.listdir(path):
+        if d.startswith("base-") and d != base_dir:
+            p = os.path.join(path, d)
+            try:
+                if now - os.path.getmtime(p) >= _gc_grace_seconds():
+                    _shutil.rmtree(p, ignore_errors=True)
+            except OSError:
+                pass
 
 
 #: legacy tombstones (written before row versioning) hide a doc forever —
@@ -933,57 +933,6 @@ _NEARDUP_ISIN_MAX = 20000
 _NEARDUP_PROBE_ISIN_MAX = 1024
 
 
-def _read_neardup_meta(path: str) -> dict | None:
-    import json as _json
-
-    p = os.path.join(path, "_meta.json")
-    if not os.path.isfile(p):
-        return None
-    with open(p) as fh:
-        return _json.load(fh)
-
-
-def _write_neardup_meta(path: str, meta: dict) -> None:
-    """Atomic replace — one meta write IS the commit for everything it
-    lists (sync band files, tombstone files, version, CDC cursor)."""
-    import json as _json
-    import uuid as _uuid
-
-    os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, f".meta_{_uuid.uuid4().hex[:8]}.json")
-    with open(tmp, "w") as fh:
-        _json.dump(meta, fh)
-    os.replace(tmp, os.path.join(path, "_meta.json"))
-
-
-def _commit_neardup_meta(path: str, planned_from: dict, meta: dict) -> None:
-    """Optimistic commit for the band index's maintenance ops (delete /
-    upsert / sync cursor) — the text/ANN indexes' discipline on this
-    layout: under the sink's publish lock, verify the live meta is still
-    the one this op PLANNED from, else abort with ConcurrentWriteError
-    (two racing maintainers must lose loudly, never silently drop each
-    other's ledger/file lists). ``build_neardup_index`` keeps an
-    unconditional write — it defines a new generation by contract — but
-    BUMPS the live version under the same lock, so a racing sync that
-    planned from the pre-rebuild meta aborts here instead of committing
-    a meta that points at the swept old base dir."""
-    from ..sinks.upsert import ConcurrentWriteError, _publish_lock
-
-    with _publish_lock(path) as lk:
-        cur = _read_neardup_meta(path)
-        if cur is not None and int(cur.get("version", 1)) != int(
-            planned_from.get("version", 1)
-        ):
-            raise ConcurrentWriteError(
-                f"near-dup index at {path} was committed concurrently "
-                f"(meta version {cur.get('version')} != planned-from "
-                f"{planned_from.get('version')}); re-run this maintenance "
-                "op against the new state"
-            )
-        lk.verify_owned()
-        _write_neardup_meta(path, meta)
-
-
 def _land_neardup_file(spark, path: str, sub: str, df, prefix: str) -> list[str]:
     """Stage ``df`` as one parquet file and rename it into ``path/sub``
     under a generation name; returns the landed names (INVISIBLE until a
@@ -992,16 +941,9 @@ def _land_neardup_file(spark, path: str, sub: str, df, prefix: str) -> list[str]
     import uuid as _uuid
 
     gen = _uuid.uuid4().hex[:8]
-    os.makedirs(os.path.join(path, sub), exist_ok=True)
     stage = os.path.join(path, f".{sub}_stage_{gen}")
     df.coalesce(1).write.mode("overwrite").parquet(stage)
-    names = []
-    for i, f in enumerate(
-        sorted(x for x in os.listdir(stage) if x.endswith(".parquet"))
-    ):
-        name = f"{prefix}-{gen}-{i:05d}.parquet"
-        os.replace(os.path.join(stage, f), os.path.join(path, sub, name))
-        names.append(name)
+    names = mf.move_staged(path, stage, gen, sub, prefix=prefix)
     _shutil.rmtree(stage, ignore_errors=True)
     return names
 
@@ -1012,7 +954,7 @@ def _neardup_id_col(path: str, columns: list, explicit: str | None) -> str:
     would tombstone or probe the wrong column). Without meta (stream-only
     or pre-meta index) fall back to inference, but STRICTLY — exactly one
     non-layout column, else raise instead of guessing by position."""
-    meta = _read_neardup_meta(path)
+    meta = mf.read(path, NEARDUP_META)
     recorded = meta.get("id_col") if meta else None
     if recorded is not None:
         if explicit is not None and explicit != recorded:
@@ -1061,7 +1003,7 @@ def read_neardup_index(
     replace is a whole sync window's atomic commit. The doc-id column
     comes from the recorded meta (``_neardup_id_col``) — never from
     column position."""
-    meta = _read_neardup_meta(path) or {}
+    meta = mf.read(path, NEARDUP_META) or {}
     parts = []
     # base_dir: the meta-pointed generation (atomic rebuilds); "base" is
     # the pre-pointer legacy location
@@ -1134,7 +1076,7 @@ def _adopt_neardup_meta(spark, path: str, id_col: str | None) -> dict:
     commit would leave the uncommitted tombstone SERVED by the fallback
     while the replacement sync rows stayed meta-gated invisible (review
     finding: the upserted docs vanished until a retry)."""
-    on_disk = _read_neardup_meta(path)
+    on_disk = mf.read(path, NEARDUP_META)
     meta = on_disk or {}
     if id_col is not None and not meta.get("id_col"):
         meta["id_col"] = id_col
@@ -1183,14 +1125,10 @@ def _adopt_neardup_meta(spark, path: str, id_col: str | None) -> dict:
         # unguarded write rolled back a racer's committed ledger,
         # resurrecting its deleted docs); the loser returns the LIVE
         # meta and its own adopt file becomes an invisible stray.
-        from ..sinks.upsert import _publish_lock
-
-        with _publish_lock(path) as lk:
-            now_disk = _read_neardup_meta(path)
-            if now_disk is not None:
-                return now_disk
-            lk.verify_owned()
-            _write_neardup_meta(path, meta)
+        try:
+            mf.commit(path, NEARDUP_META, meta, planned_from={"version": 0})
+        except mf.ConcurrentWriteError:
+            return mf.read(path, NEARDUP_META)
     return meta
 
 
@@ -1245,7 +1183,7 @@ def delete_neardup_docs(
     )
     meta["tombstones"] = list(meta["tombstones"]) + names
     meta["version"] = ver + 1
-    _commit_neardup_meta(path, planned_from, meta)
+    mf.commit(path, NEARDUP_META, meta, planned_from=planned_from)
     return len(present)
 
 
@@ -1397,11 +1335,8 @@ def upsert_neardup_docs(
         else list(meta["tombstones"])
     ) + tomb_names
     meta["version"] = ver + 1
-    if epoch is not None:
-        meta["last_epoch"] = int(epoch)
-        if epoch_stream is not None:
-            meta["epoch_stream"] = str(epoch_stream)
-    _commit_neardup_meta(path, planned_from, meta)
+    mf.carry_epoch(meta, planned_from, epoch, epoch_stream)
+    mf.commit(path, NEARDUP_META, meta, planned_from=planned_from)
     return {
         "deleted": int(n_deleted),
         "replaced": int(n_replaced),
@@ -1467,8 +1402,7 @@ def neardup_probe(
         eager=True
     )
     probe = minhash_bands(grams_new, id_col).withColumn(
-        BAND_BUCKET_COL,
-        F.pmod(F.xxhash64("band_key"), F.lit(NEARDUP_INDEX_BUCKETS)),
+        BAND_BUCKET_COL, _band_bucket()
     )
     idx_narrow = index.select(
         F.col(id_col).alias("dup_of"), "band_key", BAND_BUCKET_COL

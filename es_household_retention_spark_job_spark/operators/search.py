@@ -64,7 +64,6 @@ term), which this operator's internals compose from.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 import uuid
@@ -72,6 +71,7 @@ import uuid
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import manifest as mf
 from ..functions import eager_cache, ensure_parallelism
 from .text import tokens
 
@@ -364,21 +364,6 @@ def _parquet_footer_columns(path: str) -> list[str]:
     return list(_pq.read_schema(path).names)
 
 
-def _read_index_manifest(path: str) -> dict | None:
-    try:
-        with open(os.path.join(path, INDEX_MANIFEST)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
-
-
-def _write_index_manifest(path: str, manifest: dict) -> None:
-    tmp = os.path.join(path, f".{INDEX_MANIFEST}.{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(path, INDEX_MANIFEST))
-
-
 def _list_tf_files(path: str) -> dict[str, list[str]]:
     tf_root = os.path.join(path, "tf")
     return {
@@ -390,43 +375,6 @@ def _list_tf_files(path: str) -> dict[str, list[str]]:
         for d in os.listdir(tf_root)
         if d.startswith(f"{INDEX_SHARD_COL}=")
     }
-
-
-def _index_gc_grace() -> float:
-    """Seconds a displaced tf file / df-stats generation stays on disk for
-    in-flight readers (``SPARK_GRAFT_INDEX_GC_GRACE``, default 300 — the
-    same knob shape as the keyed sink's ``SPARK_GRAFT_SINK_GC_GRACE``)."""
-    return float(os.environ.get("SPARK_GRAFT_INDEX_GC_GRACE", "300"))
-
-
-def _roll_retired(manifest: dict, now: float, new_entry: dict | None) -> list[dict]:
-    """The manifest's ``retired`` ledger rolled forward for a new commit:
-    entries still inside the time-based grace window are CARRIED (their tf
-    files / generation dirs stay referenced, so GC keeps them); entries
-    past the grace drop out, making their files sweepable by this commit's
-    GC. ``new_entry`` records what THIS commit displaces, timestamped now.
-
-    Grace is wall-clock, not maintenance-cycles: a reader that planned
-    from the previous manifest keeps its files for at least the grace
-    window even under a fast append/compact loop (round-8's cycle-counted
-    grace could reclaim a slow reader's files after two quick commits).
-    Legacy ``prev_tf`` manifests (the old one-cycle grace) convert to a
-    retired entry stamped now — conservative: the grace restarts."""
-    grace = _index_gc_grace()
-    retired = [
-        e
-        for e in manifest.get("retired", [])
-        if now - float(e.get("ts", 0)) < grace
-    ]
-    if manifest.get("prev_tf"):
-        retired.append({"ts": now, "tf": manifest["prev_tf"], "gens": []})
-    if new_entry is not None and (
-        new_entry.get("tf")
-        or new_entry.get("gens")
-        or new_entry.get("tombstones")
-    ):
-        retired.append(new_entry)
-    return retired
 
 
 def _gc_index_gens(path: str, keep: set[str]) -> None:
@@ -520,10 +468,10 @@ def build_text_index(
     ).withColumn("n_shards", F.lit(n_shards)).write.mode("overwrite").parquet(
         f"{path}/{stats_dir}"
     )
-    _write_index_manifest(
+    mf.commit(
         path,
+        INDEX_MANIFEST,
         {
-            "version": 1,
             "n_shards": int(n_shards),
             "tf": _list_tf_files(path),
             "df": df_dir,
@@ -611,7 +559,7 @@ def append_text_index(
     import shutil
 
     spark = docs_delta.sparkSession
-    manifest = _read_index_manifest(path)
+    manifest = mf.read(path, INDEX_MANIFEST)
     if manifest is None:  # index written before manifests existed
         manifest = _bootstrap_index_manifest(spark, path)
     if check_overlap:
@@ -702,7 +650,7 @@ def append_text_index(
             INDEX_SHARD_COL, "term"
         ).write.mode("overwrite").partitionBy(INDEX_SHARD_COL).parquet(stage)
         new_tf = {d: list(fs) for d, fs in manifest["tf"].items()}
-        moved = _move_staged_tf(path, stage, gen)
+        moved = mf.move_staged(path, stage, gen, "tf", INDEX_SHARD_COL)
         for d, names in moved.items():
             new_tf.setdefault(d, []).extend(names)
 
@@ -765,7 +713,7 @@ def append_text_index(
             # retired ledger: readers that planned from the previous
             # manifest keep them for the full grace window, not just one
             # maintenance cycle
-            "retired": _roll_retired(
+            "retired": mf.roll_retired(
                 manifest,
                 now,
                 {"ts": now, "tf": {}, "gens": [manifest["df"], manifest["stats"]]},
@@ -776,21 +724,8 @@ def append_text_index(
         for carry in ("tombstones", "n_tombstones"):
             if manifest.get(carry) is not None:
                 new_manifest[carry] = manifest[carry]
-        if epoch is not None:
-            # the epoch marker and its stream label commit TOGETHER: an
-            # anonymous epoch (no epoch_stream) must not inherit a prior
-            # stream's label — epoch counters are only comparable within
-            # one stream identity, and mislabeling this commit would make
-            # that stream's next batch look like a replay
-            new_manifest["last_epoch"] = int(epoch)
-            if epoch_stream is not None:
-                new_manifest["epoch_stream"] = str(epoch_stream)
-        else:  # non-streaming append: carry the previous marker forward
-            if manifest.get("last_epoch") is not None:
-                new_manifest["last_epoch"] = int(manifest["last_epoch"])
-            if manifest.get("epoch_stream") is not None:
-                new_manifest["epoch_stream"] = str(manifest["epoch_stream"])
-        _write_index_manifest(path, new_manifest)
+        mf.carry_epoch(new_manifest, manifest, epoch, epoch_stream)
+        mf.commit(path, INDEX_MANIFEST, new_manifest, planned_from=manifest)
         _gc_index_gens(
             path, keep={df_dir, stats_dir} | _retired_gens(new_manifest)
         )
@@ -852,34 +787,6 @@ def _bootstrap_index_manifest(spark, path: str) -> dict:
         "df": "df",
         "stats": "stats",
     }
-
-
-def _move_staged_tf(path: str, stage: str, gen: str) -> dict[str, list[str]]:
-    """Move a staged tf write's files into the live shard dirs under
-    generation names — the crash-safety-critical file-publication step
-    shared by append (extends shard lists) and compaction (replaces
-    them). Returns {shard_dir: [moved names]}; files stay INVISIBLE until
-    the caller's manifest commit references them."""
-    moved: dict[str, list[str]] = {}
-    for d in os.listdir(stage):
-        if not d.startswith(f"{INDEX_SHARD_COL}="):
-            continue
-        os.makedirs(os.path.join(path, "tf", d), exist_ok=True)
-        names = []
-        for i, f in enumerate(
-            sorted(
-                x
-                for x in os.listdir(os.path.join(stage, d))
-                if x.endswith(".parquet")
-            )
-        ):
-            name = f"gen-{gen}-{i:05d}.parquet"
-            os.rename(
-                os.path.join(stage, d, f), os.path.join(path, "tf", d, name)
-            )
-            names.append(name)
-        moved[d] = names
-    return moved
 
 
 def _tf_bloom_max_docs() -> int:
@@ -1110,7 +1017,7 @@ def _sweep_stray_tf(path: str, manifest: dict) -> None:
     ``tf`` nor its ``retired`` ledger: leftovers of crashed appends
     (moved in, never committed) and compaction-replaced files whose
     time-based grace has expired. The retired ledger (rolled by
-    ``_roll_retired`` on every commit) keeps displaced file sets alive
+    ``manifest.roll_retired`` on every commit) keeps displaced file sets alive
     for ``SPARK_GRAFT_INDEX_GC_GRACE`` seconds so a slow reader that
     planned from a previous manifest keeps its files even under a fast
     maintenance loop; legacy ``prev_tf`` is honored for manifests written
@@ -1168,7 +1075,7 @@ def compact_text_index(spark, path: str) -> int:
     compaction changes layout, never content."""
     import shutil
 
-    manifest = _read_index_manifest(path)
+    manifest = mf.read(path, INDEX_MANIFEST)
     if manifest is None:
         manifest = _bootstrap_index_manifest(spark, path)
     # a pending doc-tombstone ledger makes compaction the PURGE: postings
@@ -1208,7 +1115,7 @@ def compact_text_index(spark, path: str) -> int:
             .parquet(stage)
         )
         new_tf = {d: list(fs) for d, fs in manifest["tf"].items()}
-        moved = _move_staged_tf(path, stage, gen)
+        moved = mf.move_staged(path, stage, gen, "tf", INDEX_SHARD_COL)
         for d, names in moved.items():
             new_tf[d] = sorted(names)  # REPLACES the shard's file set
         for d in multi:
@@ -1233,7 +1140,7 @@ def compact_text_index(spark, path: str) -> int:
             "df": manifest["df"],
             "stats": manifest["stats"],
             # time-based grace for the replaced files (see _sweep_stray_tf)
-            "retired": _roll_retired(
+            "retired": mf.roll_retired(
                 manifest,
                 now,
                 {
@@ -1246,11 +1153,8 @@ def compact_text_index(spark, path: str) -> int:
                 },
             ),
         }
-        if manifest.get("last_epoch") is not None:
-            new_manifest["last_epoch"] = int(manifest["last_epoch"])
-        if manifest.get("epoch_stream") is not None:
-            new_manifest["epoch_stream"] = manifest["epoch_stream"]
-        _write_index_manifest(path, new_manifest)
+        mf.carry_epoch(new_manifest, manifest)
+        mf.commit(path, INDEX_MANIFEST, new_manifest, planned_from=manifest)
         # reclaim crashed-compaction leftovers now (the retired ledger in
         # the just-committed manifest preserves the grace window for the
         # files THIS compaction replaced; anything referenced by neither
@@ -1366,7 +1270,7 @@ def bm25_search_indexed(
     ]
     q = spark.createDataFrame(qterms, "query_id string, term string")
     vocab = sorted({t for _, t in qterms})
-    manifest = _read_index_manifest(path)
+    manifest = mf.read(path, INDEX_MANIFEST)
     if manifest is None:
         manifest = _bootstrap_index_manifest(spark, path)
     corpus = spark.read.parquet(f"{path}/{manifest['stats']}").drop("n_shards")
@@ -1551,7 +1455,7 @@ def bm25_more_like_this_indexed(
     than the scan), so the filter falls back to a broadcast semi-join and
     only the shard-level FILE pruning remains literal (≤ n_shards ints
     either way)."""
-    manifest = _read_index_manifest(path)
+    manifest = mf.read(path, INDEX_MANIFEST)
     if manifest is None:
         manifest = _bootstrap_index_manifest(spark, path)
     n_shards = int(manifest["n_shards"])
@@ -1682,7 +1586,7 @@ def choose_search_route(
     carries seek/footer overhead a sequential codegen scan does not, so
     parity sits well below 1.0)."""
     if manifest is None:
-        manifest = _read_index_manifest(path)
+        manifest = mf.read(path, INDEX_MANIFEST)
         if manifest is None:
             manifest = _bootstrap_index_manifest(spark, path)
     stats = spark.read.parquet(f"{path}/{manifest['stats']}").collect()[0]
@@ -1754,7 +1658,7 @@ def choose_mlt_route(
     the postings rows the indexed plan would read. The scan plan's cost
     proxy is the corpus token count it must re-tokenize."""
     if manifest is None:
-        manifest = _read_index_manifest(path)
+        manifest = mf.read(path, INDEX_MANIFEST)
         if manifest is None:
             manifest = _bootstrap_index_manifest(spark, path)
     stats = spark.read.parquet(f"{path}/{manifest['stats']}").collect()[0]
@@ -1892,7 +1796,7 @@ def delete_text_docs(
     doc-curation pipeline's contract)."""
     import shutil
 
-    manifest = _read_index_manifest(path)
+    manifest = mf.read(path, INDEX_MANIFEST)
     if manifest is None:
         manifest = _bootstrap_index_manifest(spark, path)
     ids = sorted(set(doc_ids))
@@ -1939,23 +1843,13 @@ def delete_text_docs(
         gen = uuid.uuid4().hex[:8]
         # tombstone ledger file (ids only — the read-side filter's shape)
         stage_t = f"{path}/.tombstones_stage_{gen}"
-        os.makedirs(os.path.join(path, "tombstones"), exist_ok=True)
         found.select(
             F.col(id_col).alias("_tomb_id"),
             # this tombstone applies to rows committed up to NOW — a
             # later re-append's rows carry a higher _ver and stay live
             F.lit(int(manifest.get("version", 1))).alias("_tomb_as_of"),
         ).coalesce(1).write.mode("overwrite").parquet(stage_t)
-        names = []
-        for i, f in enumerate(
-            sorted(x for x in os.listdir(stage_t) if x.endswith(".parquet"))
-        ):
-            name = f"gen-{gen}-{i:05d}.parquet"
-            os.rename(
-                os.path.join(stage_t, f),
-                os.path.join(path, "tombstones", name),
-            )
-            names.append(name)
+        names = mf.move_staged(path, stage_t, gen, "tombstones")
         shutil.rmtree(stage_t, ignore_errors=True)
         # df: subtract each deleted doc's distinct terms (the tf table is
         # keyed by (doc, term), so a count per term IS the decrement);
@@ -2004,7 +1898,7 @@ def delete_text_docs(
             "stats": stats_dir,
             "tombstones": sorted(list(existing) + names),
             "n_tombstones": int(manifest.get("n_tombstones", 0)) + n_found,
-            "retired": _roll_retired(
+            "retired": mf.roll_retired(
                 manifest,
                 now,
                 {
@@ -2014,16 +1908,8 @@ def delete_text_docs(
                 },
             ),
         }
-        if epoch is not None:
-            new_manifest["last_epoch"] = int(epoch)
-            if epoch_stream is not None:
-                new_manifest["epoch_stream"] = str(epoch_stream)
-        else:
-            if manifest.get("last_epoch") is not None:
-                new_manifest["last_epoch"] = int(manifest["last_epoch"])
-            if manifest.get("epoch_stream") is not None:
-                new_manifest["epoch_stream"] = str(manifest["epoch_stream"])
-        _write_index_manifest(path, new_manifest)
+        mf.carry_epoch(new_manifest, manifest, epoch, epoch_stream)
+        mf.commit(path, INDEX_MANIFEST, new_manifest, planned_from=manifest)
         _gc_index_gens(
             path, keep={df_dir, stats_dir} | _retired_gens(new_manifest)
         )
@@ -2066,7 +1952,7 @@ def upsert_text_docs(
     n_docs}."""
     import shutil
 
-    manifest = _read_index_manifest(path)
+    manifest = mf.read(path, INDEX_MANIFEST)
     if manifest is None:
         manifest = _bootstrap_index_manifest(spark, path)
     # known_ids: the CDC sync already collected the window's ids from the
@@ -2166,7 +2052,7 @@ def upsert_text_docs(
             "overwrite"
         ).partitionBy(INDEX_SHARD_COL).parquet(stage)
         new_tf = {d: list(fs) for d, fs in manifest["tf"].items()}
-        moved = _move_staged_tf(path, stage, gen)
+        moved = mf.move_staged(path, stage, gen, "tf", INDEX_SHARD_COL)
         for d, names in moved.items():
             new_tf.setdefault(d, []).extend(names)
 
@@ -2176,22 +2062,11 @@ def upsert_text_docs(
         names = []
         if live_set:
             stage_t = f"{path}/.tombstones_stage_{gen}"
-            os.makedirs(os.path.join(path, "tombstones"), exist_ok=True)
             retired.select(id_col, "dl").distinct().select(
                 F.col(id_col).alias("_tomb_id"),
                 F.lit(ver).alias("_tomb_as_of"),
             ).coalesce(1).write.mode("overwrite").parquet(stage_t)
-            for i, f in enumerate(
-                sorted(
-                    x for x in os.listdir(stage_t) if x.endswith(".parquet")
-                )
-            ):
-                name = f"gen-{gen}-{i:05d}.parquet"
-                os.rename(
-                    os.path.join(stage_t, f),
-                    os.path.join(path, "tombstones", name),
-                )
-                names.append(name)
+            names = mf.move_staged(path, stage_t, gen, "tombstones")
             shutil.rmtree(stage_t, ignore_errors=True)
 
         # df: one pass — old df minus the retired docs' per-term counts
@@ -2257,7 +2132,7 @@ def upsert_text_docs(
             ),
             "df": df_dir,
             "stats": stats_dir,
-            "retired": _roll_retired(
+            "retired": mf.roll_retired(
                 manifest,
                 now,
                 {
@@ -2272,16 +2147,8 @@ def upsert_text_docs(
             new_manifest["n_tombstones"] = int(
                 manifest.get("n_tombstones", 0)
             ) + len(live_set)
-        if epoch is not None:
-            new_manifest["last_epoch"] = int(epoch)
-            if epoch_stream is not None:
-                new_manifest["epoch_stream"] = str(epoch_stream)
-        else:
-            if manifest.get("last_epoch") is not None:
-                new_manifest["last_epoch"] = int(manifest["last_epoch"])
-            if manifest.get("epoch_stream") is not None:
-                new_manifest["epoch_stream"] = str(manifest["epoch_stream"])
-        _write_index_manifest(path, new_manifest)
+        mf.carry_epoch(new_manifest, manifest, epoch, epoch_stream)
+        mf.commit(path, INDEX_MANIFEST, new_manifest, planned_from=manifest)
         _gc_index_gens(
             path, keep={df_dir, stats_dir} | _retired_gens(new_manifest)
         )

@@ -24,13 +24,13 @@ and any oracle recompute identical planes; no RNG state is shipped.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 import uuid
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import manifest as mf
 from ..functions import ensure_parallelism
 
 EMB_DIM = 64
@@ -514,51 +514,6 @@ ANN_CELL_COL = "_cell"
 ANN_MANIFEST = "_ann_manifest.json"
 
 
-def _read_ann_manifest(path: str) -> dict | None:
-    try:
-        with open(os.path.join(path, ANN_MANIFEST)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
-
-
-def _write_ann_manifest(path: str, manifest: dict) -> None:
-    tmp = os.path.join(path, f".{ANN_MANIFEST}.{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(path, ANN_MANIFEST))
-
-
-def _commit_ann_manifest(path: str, planned_from: dict, new_manifest: dict) -> None:
-    """Optimistic commit for the index's single-writer maintenance ops
-    (append / compact / split): verify, UNDER THE SAME LOCK as the
-    replace, that the manifest is still the one this op PLANNED from.
-    The maintenance contract is single-writer (like the text index), so
-    the check never fires in normal operation — it converts an operator
-    error (two maintenance loops pointed at one index) from a silent
-    lost-update into a loud abort, the sink's ConcurrentWriteError
-    discipline applied to the index ledger. The check+replace is
-    serialized by the sink's ``_publish_lock`` (r10 advisory: a bare
-    read-check-then-replace lets two racers whose checks both run before
-    either ``os.replace`` BOTH commit, silently dropping the earlier
-    update — exactly the interleaving the check exists to make loud)."""
-    from ..sinks.upsert import ConcurrentWriteError, _publish_lock
-
-    with _publish_lock(path) as lk:
-        cur = _read_ann_manifest(path)
-        if cur is not None and int(cur.get("version", 1)) != int(
-            planned_from.get("version", 1)
-        ):
-            raise ConcurrentWriteError(
-                f"vector index at {path} was committed concurrently (manifest "
-                f"version {cur.get('version')} != planned-from "
-                f"{planned_from.get('version')}); re-run this maintenance op "
-                "against the new state"
-            )
-        lk.verify_owned()
-        _write_ann_manifest(path, new_manifest)
-
-
 def _list_cell_files(path: str, sub: str = "cells") -> dict[str, list[str]]:
     root = os.path.join(path, sub)
     if not os.path.isdir(root):
@@ -790,7 +745,6 @@ def build_ann_index(
         for r in assigned.groupBy(ANN_CELL_COL).agg(F.count("*").alias("n")).collect()
     }
     manifest = {
-        "version": 1,
         "n_cells": int(n_cells),
         "cells": _list_cell_files(path),
         "codes": _list_cell_files(path, "codes"),
@@ -815,7 +769,7 @@ def build_ann_index(
         manifest["pq_params"] = {"m": m, "ksub": ksub}
         manifest["pq_books_dir"] = "pq_books"
     assigned.unpersist()
-    _write_ann_manifest(path, manifest)
+    mf.commit(path, ANN_MANIFEST, manifest)
     if pq:
         # per-corpus rerank calibration (atomic follow-up commit): what
         # lets knn_ann_auto admit the tier by default with a recall floor
@@ -858,7 +812,7 @@ def knn_ivf_indexed(
     if plan is not None:
         manifest, cents = plan["manifest"], plan["cents"]
     else:
-        manifest = _read_ann_manifest(path)
+        manifest = mf.read(path, ANN_MANIFEST)
         if manifest is None:
             manifest = _bootstrap_ann_manifest(spark, path)
         cents = _read_centroids(spark, path, manifest)
@@ -1103,7 +1057,7 @@ def knn_filtered_auto(
     ids on the driver; the brute arm's scan is column-pruned to
     id+embedding+norm and its scored pairs are exactly s·n_live per
     query — the arm is only chosen when that is the SMALLER number."""
-    manifest = _read_ann_manifest(path)
+    manifest = mf.read(path, ANN_MANIFEST)
     if manifest is None:
         manifest = _bootstrap_ann_manifest(spark, path)
     cents = _read_centroids(spark, path, manifest)
@@ -1146,63 +1100,6 @@ def knn_filtered_auto(
         allowed=allowed,
         allowed_n=allowed_n,
     )
-
-
-def _move_staged_cells(
-    path: str, stage: str, gen: str, sub: str
-) -> dict[str, list[str]]:
-    """Move a staged cell-partitioned write's files into the live ``sub``
-    tree under generation names — same publication contract as the text
-    index's ``_move_staged_tf``: files stay INVISIBLE until the caller's
-    manifest commit references them."""
-    moved: dict[str, list[str]] = {}
-    for d in os.listdir(stage):
-        if not d.startswith(f"{ANN_CELL_COL}="):
-            continue
-        os.makedirs(os.path.join(path, sub, d), exist_ok=True)
-        names = []
-        for i, f in enumerate(
-            sorted(
-                x
-                for x in os.listdir(os.path.join(stage, d))
-                if x.endswith(".parquet")
-            )
-        ):
-            name = f"gen-{gen}-{i:05d}.parquet"
-            os.rename(
-                os.path.join(stage, d, f), os.path.join(path, sub, d, name)
-            )
-            names.append(name)
-        moved[d] = names
-    return moved
-
-
-def _ann_roll_retired(
-    manifest: dict, now: float, new_entry: dict | None
-) -> list[dict]:
-    """The ANN manifest's retired-file ledger rolled forward — the vector
-    twin of the text index's ``_roll_retired``: entries inside the
-    wall-clock grace (``SPARK_GRAFT_INDEX_GC_GRACE``, shared knob) are
-    carried so a reader that planned from a previous manifest keeps its
-    files; expired entries drop out and become sweepable."""
-    from .search import _index_gc_grace
-
-    grace = _index_gc_grace()
-    retired = [
-        e
-        for e in manifest.get("retired", [])
-        if now - float(e.get("ts", 0)) < grace
-    ]
-    if new_entry is not None and (
-        new_entry.get("cells")
-        or new_entry.get("codes")
-        or new_entry.get("pq")
-        or new_entry.get("centroids_dir")
-        or new_entry.get("pq_books_dir")
-        or new_entry.get("tombstones")
-    ):
-        retired.append(new_entry)
-    return retired
 
 
 def _sweep_stray_ann(path: str, manifest: dict) -> None:
@@ -1321,7 +1218,7 @@ def append_ann_index(
     import time
 
     spark = vecs_delta.sparkSession
-    manifest = _read_ann_manifest(path)
+    manifest = mf.read(path, ANN_MANIFEST)
     if manifest is None:
         manifest = _bootstrap_ann_manifest(spark, path)
     if check_overlap:
@@ -1382,7 +1279,8 @@ def append_ann_index(
             ANN_CELL_COL, id_col
         ).write.mode("overwrite").partitionBy(ANN_CELL_COL).parquet(stage)
         new_cells = {d: list(fs) for d, fs in manifest["cells"].items()}
-        for d, names in _move_staged_cells(path, stage, gen, "cells").items():
+        moved = mf.move_staged(path, stage, gen, "cells", ANN_CELL_COL)
+        for d, names in moved.items():
             new_cells.setdefault(d, []).extend(names)
         # roll the per-cell row ledger forward from the delta's counts
         # (one delta-sized agg; footer-bootstrap for legacy manifests)
@@ -1407,8 +1305,8 @@ def append_ann_index(
                 "overwrite"
             ).partitionBy(ANN_CELL_COL).parquet(stage_codes)
             new_codes = {d: list(fs) for d, fs in manifest["codes"].items()}
-            for d, names in _move_staged_cells(
-                path, stage_codes, gen, "codes"
+            for d, names in mf.move_staged(
+                path, stage_codes, gen, "codes", ANN_CELL_COL
             ).items():
                 new_codes.setdefault(d, []).extend(names)
             new_manifest["codes"] = {
@@ -1425,28 +1323,17 @@ def append_ann_index(
                 "overwrite"
             ).partitionBy(ANN_CELL_COL).parquet(stage_pq)
             new_pq = {d: list(fs) for d, fs in manifest["pq"].items()}
-            for d, names in _move_staged_cells(
-                path, stage_pq, gen, "pq"
+            for d, names in mf.move_staged(
+                path, stage_pq, gen, "pq", ANN_CELL_COL
             ).items():
                 new_pq.setdefault(d, []).extend(names)
             new_manifest["pq"] = {d: sorted(fs) for d, fs in new_pq.items()}
         for carry in ("pq_params", "pq_books_dir", "pq_calibration", "tombstones", "n_tombstones"):
             if manifest.get(carry) is not None:
                 new_manifest[carry] = manifest[carry]
-        new_manifest["retired"] = _ann_roll_retired(manifest, time.time(), None)
-        if epoch is not None:
-            # epoch marker + stream label commit together (anonymous
-            # epochs must not inherit a prior stream's label — see
-            # append_text_index)
-            new_manifest["last_epoch"] = int(epoch)
-            if epoch_stream is not None:
-                new_manifest["epoch_stream"] = str(epoch_stream)
-        else:
-            if manifest.get("last_epoch") is not None:
-                new_manifest["last_epoch"] = int(manifest["last_epoch"])
-            if manifest.get("epoch_stream") is not None:
-                new_manifest["epoch_stream"] = str(manifest["epoch_stream"])
-        _commit_ann_manifest(path, manifest, new_manifest)
+        new_manifest["retired"] = mf.roll_retired(manifest, time.time())
+        mf.carry_epoch(new_manifest, manifest, epoch, epoch_stream)
+        mf.commit(path, ANN_MANIFEST, new_manifest, planned_from=manifest)
         # reclaim crashed appends' never-committed leftovers (invisible
         # to every reader); retired-ledger files stay until their grace
         # expires
@@ -1476,7 +1363,7 @@ def compact_ann_index(spark, path: str) -> int:
     import shutil
     import time
 
-    manifest = _read_ann_manifest(path)
+    manifest = mf.read(path, ANN_MANIFEST)
     if manifest is None:
         manifest = _bootstrap_ann_manifest(spark, path)
     # cells carrying tombstoned rows are rewritten even when single-file:
@@ -1548,10 +1435,11 @@ def compact_ann_index(spark, path: str) -> int:
             df.repartition(len(multi), F.col(ANN_CELL_COL)).sortWithinPartitions(
                 ANN_CELL_COL, id_field
             ).write.mode("overwrite").partitionBy(ANN_CELL_COL).parquet(stage)
-            for d, names in _move_staged_cells(path, stage, gen, key).items():
+            moved = mf.move_staged(path, stage, gen, key, ANN_CELL_COL)
+            for d, names in moved.items():
                 new_manifest[key][d] = sorted(names)  # REPLACES the set
         now = time.time()
-        new_manifest["retired"] = _ann_roll_retired(
+        new_manifest["retired"] = mf.roll_retired(
             manifest,
             now,
             {
@@ -1567,11 +1455,8 @@ def compact_ann_index(spark, path: str) -> int:
         # every tombstoned cell was rewritten in every sidecar: the purge
         # is complete and the ledger clears (files GC via the sweep once
         # their retired grace expires)
-        if manifest.get("last_epoch") is not None:
-            new_manifest["last_epoch"] = int(manifest["last_epoch"])
-        if manifest.get("epoch_stream") is not None:
-            new_manifest["epoch_stream"] = str(manifest["epoch_stream"])
-        _commit_ann_manifest(path, manifest, new_manifest)
+        mf.carry_epoch(new_manifest, manifest)
+        mf.commit(path, ANN_MANIFEST, new_manifest, planned_from=manifest)
         _sweep_stray_ann(path, new_manifest)
     finally:
         for stage in stages:
@@ -1764,7 +1649,7 @@ def knn_sq8_indexed(
     if plan is not None:
         manifest, cents = plan["manifest"], plan["cents"]
     else:
-        manifest = _read_ann_manifest(path)
+        manifest = mf.read(path, ANN_MANIFEST)
         if manifest is None:
             manifest = _bootstrap_ann_manifest(spark, path)
         cents = None
@@ -2072,7 +1957,7 @@ def choose_ann_route(
     and the endpoint each re-read centroids and re-assigned probes,
     doubling the query-batch-sized planning work per call)."""
     R = int(rerank) if rerank is not None else 4 * k
-    manifest = _read_ann_manifest(path)
+    manifest = mf.read(path, ANN_MANIFEST)
     if manifest is None:
         manifest = _bootstrap_ann_manifest(spark, path)
     cents = _read_centroids(spark, path, manifest)
@@ -2221,7 +2106,7 @@ def ann_cell_health(
     (``needs_compaction``'s ANN twin); ``split_ann_cells`` is the
     mechanism. ``max_rows_per_cell=None`` defaults the bound to
     4× the mean (a balanced index sits at skew ~1)."""
-    manifest = _read_ann_manifest(path)
+    manifest = mf.read(path, ANN_MANIFEST)
     if manifest is None:
         manifest = _bootstrap_ann_manifest(spark, path)
     rows = _manifest_cell_rows(spark, path, manifest)
@@ -2283,7 +2168,7 @@ def split_ann_cells(
     import shutil
     import time
 
-    manifest = _read_ann_manifest(path)
+    manifest = mf.read(path, ANN_MANIFEST)
     if manifest is None:
         manifest = _bootstrap_ann_manifest(spark, path)
     health = ann_cell_health(spark, path, max_rows_per_cell)
@@ -2375,7 +2260,7 @@ def split_ann_cells(
         ).sortWithinPartitions(ANN_CELL_COL, id_col).write.mode(
             "overwrite"
         ).partitionBy(ANN_CELL_COL).parquet(stage)
-        moved = _move_staged_cells(path, stage, gen, "cells")
+        moved = mf.move_staged(path, stage, gen, "cells", ANN_CELL_COL)
         for old_d in retiring_cells:
             new_manifest["cells"].pop(old_d, None)
         for d, names in moved.items():
@@ -2386,7 +2271,9 @@ def split_ann_cells(
             ).sortWithinPartitions(ANN_CELL_COL, id_col).write.mode(
                 "overwrite"
             ).partitionBy(ANN_CELL_COL).parquet(stage_codes)
-            moved_codes = _move_staged_cells(path, stage_codes, gen, "codes")
+            moved_codes = mf.move_staged(
+                path, stage_codes, gen, "codes", ANN_CELL_COL
+            )
             for old_d in retiring_codes:
                 new_manifest["codes"].pop(old_d, None)
             for d, names in moved_codes.items():
@@ -2401,7 +2288,7 @@ def split_ann_cells(
             ).sortWithinPartitions(ANN_CELL_COL, id_col).write.mode(
                 "overwrite"
             ).partitionBy(ANN_CELL_COL).parquet(stage_pq)
-            moved_pq = _move_staged_cells(path, stage_pq, gen, "pq")
+            moved_pq = mf.move_staged(path, stage_pq, gen, "pq", ANN_CELL_COL)
             for old_d in retiring_pq:
                 new_manifest["pq"].pop(old_d, None)
             for d, names in moved_pq.items():
@@ -2426,20 +2313,7 @@ def split_ann_cells(
             n_keep = keep.count()
             if n_keep:
                 keep.coalesce(1).write.mode("overwrite").parquet(stage_tomb)
-                names = []
-                for i, f in enumerate(
-                    sorted(
-                        x
-                        for x in os.listdir(stage_tomb)
-                        if x.endswith(".parquet")
-                    )
-                ):
-                    name = f"gen-{gen}-{i:05d}.parquet"
-                    os.rename(
-                        os.path.join(stage_tomb, f),
-                        os.path.join(path, "tombstones", name),
-                    )
-                    names.append(name)
+                names = mf.move_staged(path, stage_tomb, gen, "tombstones")
                 new_manifest["tombstones"] = names
                 new_manifest["n_tombstones"] = int(n_keep)
         # the NEW centroid generation (atomic flip via the manifest pointer)
@@ -2450,7 +2324,7 @@ def split_ann_cells(
         ).write.mode("overwrite").parquet(os.path.join(path, cent_dir))
         new_manifest["centroids_dir"] = cent_dir
         now = time.time()
-        new_manifest["retired"] = _ann_roll_retired(
+        new_manifest["retired"] = mf.roll_retired(
             manifest,
             now,
             {
@@ -2462,11 +2336,8 @@ def split_ann_cells(
                 "tombstones": list(manifest.get("tombstones") or []),
             },
         )
-        if manifest.get("last_epoch") is not None:
-            new_manifest["last_epoch"] = int(manifest["last_epoch"])
-        if manifest.get("epoch_stream") is not None:
-            new_manifest["epoch_stream"] = str(manifest["epoch_stream"])
-        _commit_ann_manifest(path, manifest, new_manifest)
+        mf.carry_epoch(new_manifest, manifest)
+        mf.commit(path, ANN_MANIFEST, new_manifest, planned_from=manifest)
         _sweep_stray_ann(path, new_manifest)
     finally:
         all_assigned.unpersist()
@@ -2991,7 +2862,7 @@ def add_pq_sidecar(
     import shutil
     import time
 
-    manifest = _read_ann_manifest(path)
+    manifest = mf.read(path, ANN_MANIFEST)
     if manifest is None:
         manifest = _bootstrap_ann_manifest(spark, path)
     m = int(m) if m is not None else PQ_M
@@ -3013,7 +2884,7 @@ def add_pq_sidecar(
         ).sortWithinPartitions(ANN_CELL_COL, id_col).write.mode(
             "overwrite"
         ).partitionBy(ANN_CELL_COL).parquet(stage)
-        moved = _move_staged_cells(path, stage, gen, "pq")
+        moved = mf.move_staged(path, stage, gen, "pq", ANN_CELL_COL)
         books_dir = f"pq_books_gen-{gen}"
         _write_pq_books(spark, os.path.join(path, books_dir), cb)
         new_manifest = {
@@ -3041,16 +2912,13 @@ def add_pq_sidecar(
             "pq": {d: list(fs) for d, fs in manifest.get("pq", {}).items()},
             "pq_books_dir": manifest.get("pq_books_dir"),
         }
-        new_manifest["retired"] = _ann_roll_retired(
+        new_manifest["retired"] = mf.roll_retired(
             manifest,
             now,
             old_pq if (old_pq["pq"] or old_pq["pq_books_dir"]) else None,
         )
-        if manifest.get("last_epoch") is not None:
-            new_manifest["last_epoch"] = int(manifest["last_epoch"])
-        if manifest.get("epoch_stream") is not None:
-            new_manifest["epoch_stream"] = str(manifest["epoch_stream"])
-        _commit_ann_manifest(path, manifest, new_manifest)
+        mf.carry_epoch(new_manifest, manifest)
+        mf.commit(path, ANN_MANIFEST, new_manifest, planned_from=manifest)
         _sweep_stray_ann(path, new_manifest)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
@@ -3112,7 +2980,7 @@ def knn_pq_indexed(
     if plan is not None:
         manifest, cents = plan["manifest"], plan["cents"]
     else:
-        manifest = _read_ann_manifest(path)
+        manifest = mf.read(path, ANN_MANIFEST)
         if manifest is None:
             manifest = _bootstrap_ann_manifest(spark, path)
         cents = None
@@ -3221,7 +3089,7 @@ def _commit_degenerate_pq_calibration(
     new_manifest = dict(manifest)
     new_manifest["version"] = int(manifest.get("version", 1)) + 1
     new_manifest["pq_calibration"] = calib
-    _commit_ann_manifest(path, manifest, new_manifest)
+    mf.commit(path, ANN_MANIFEST, new_manifest, planned_from=manifest)
     return calib
 
 
@@ -3264,7 +3132,7 @@ def calibrate_pq_refine(
 
     Returns the calibration dict. Runs automatically at the end of
     ``build_ann_index(pq=True)`` and ``add_pq_sidecar``."""
-    manifest = _read_ann_manifest(path)
+    manifest = mf.read(path, ANN_MANIFEST)
     if manifest is None:
         manifest = _bootstrap_ann_manifest(spark, path)
     if not manifest.get("pq"):
@@ -3420,7 +3288,7 @@ def calibrate_pq_refine(
     new_manifest = dict(manifest)
     new_manifest["version"] = int(manifest.get("version", 1)) + 1
     new_manifest["pq_calibration"] = calib
-    _commit_ann_manifest(path, manifest, new_manifest)
+    mf.commit(path, ANN_MANIFEST, new_manifest, planned_from=manifest)
     return calib
 
 
@@ -3457,7 +3325,7 @@ def delete_ann_ids(
     import shutil
     import time
 
-    manifest = _read_ann_manifest(path)
+    manifest = mf.read(path, ANN_MANIFEST)
     if manifest is None:
         manifest = _bootstrap_ann_manifest(spark, path)
     ids = sorted(set(ids))
@@ -3504,17 +3372,7 @@ def delete_ann_ids(
         spark.createDataFrame(pairs, located.schema).coalesce(1).write.mode(
             "overwrite"
         ).parquet(stage)
-        os.makedirs(os.path.join(path, "tombstones"), exist_ok=True)
-        names = []
-        for i, f in enumerate(
-            sorted(x for x in os.listdir(stage) if x.endswith(".parquet"))
-        ):
-            name = f"gen-{gen}-{i:05d}.parquet"
-            os.rename(
-                os.path.join(stage, f),
-                os.path.join(path, "tombstones", name),
-            )
-            names.append(name)
+        names = mf.move_staged(path, stage, gen, "tombstones")
         cell_rows = dict(_manifest_cell_rows(spark, path, manifest))
         per_cell: dict[str, int] = {}
         for r in pairs:
@@ -3539,17 +3397,9 @@ def delete_ann_ids(
         for carry in ("pq_params", "pq_books_dir", "pq_calibration", "centroids_dir"):
             if manifest.get(carry) is not None:
                 new_manifest[carry] = manifest[carry]
-        new_manifest["retired"] = _ann_roll_retired(manifest, time.time(), None)
-        if epoch is not None:
-            new_manifest["last_epoch"] = int(epoch)
-            if epoch_stream is not None:
-                new_manifest["epoch_stream"] = str(epoch_stream)
-        else:
-            if manifest.get("last_epoch") is not None:
-                new_manifest["last_epoch"] = int(manifest["last_epoch"])
-            if manifest.get("epoch_stream") is not None:
-                new_manifest["epoch_stream"] = str(manifest["epoch_stream"])
-        _commit_ann_manifest(path, manifest, new_manifest)
+        new_manifest["retired"] = mf.roll_retired(manifest, time.time())
+        mf.carry_epoch(new_manifest, manifest, epoch, epoch_stream)
+        mf.commit(path, ANN_MANIFEST, new_manifest, planned_from=manifest)
         _sweep_stray_ann(path, new_manifest)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
@@ -3599,7 +3449,7 @@ def upsert_ann_vectors(
     import time
 
     spark = vecs.sparkSession
-    manifest = _read_ann_manifest(path)
+    manifest = mf.read(path, ANN_MANIFEST)
     if manifest is None:
         manifest = _bootstrap_ann_manifest(spark, path)
     cents = _read_centroids(spark, path, manifest)
@@ -3753,7 +3603,7 @@ def upsert_ann_vectors(
             ).sortWithinPartitions(ANN_CELL_COL, sort_id).write.mode(
                 "overwrite"
             ).partitionBy(ANN_CELL_COL).parquet(stage)
-            return _move_staged_cells(path, stage, gen, sub)
+            return mf.move_staged(path, stage, gen, sub, ANN_CELL_COL)
 
         # ----- ONE fused write per sidecar: the rewrite arm (touched
         # cells' survivors) and the append arm (delta rows, touched or
@@ -3856,20 +3706,7 @@ def upsert_ann_vectors(
                 tomb_keep_rows.coalesce(1).write.mode("overwrite").parquet(
                     stage_t
                 )
-                names = []
-                for i, f in enumerate(
-                    sorted(
-                        x
-                        for x in os.listdir(stage_t)
-                        if x.endswith(".parquet")
-                    )
-                ):
-                    name = f"gen-{gen}-{i:05d}.parquet"
-                    os.rename(
-                        os.path.join(stage_t, f),
-                        os.path.join(path, "tombstones", name),
-                    )
-                    names.append(name)
+                names = mf.move_staged(path, stage_t, gen, "tombstones")
                 new_manifest["tombstones"] = names
                 new_manifest["n_tombstones"] = int(n_keep)
             tomb_keep_rows.unpersist()
@@ -3881,19 +3718,11 @@ def upsert_ann_vectors(
             "pq": retiring["pq"],
             "tombstones": list(tomb_files),
         }
-        new_manifest["retired"] = _ann_roll_retired(
+        new_manifest["retired"] = mf.roll_retired(
             manifest, now, entry if (touched or tomb_files) else None
         )
-        if epoch is not None:
-            new_manifest["last_epoch"] = int(epoch)
-            if epoch_stream is not None:
-                new_manifest["epoch_stream"] = str(epoch_stream)
-        else:
-            if manifest.get("last_epoch") is not None:
-                new_manifest["last_epoch"] = int(manifest["last_epoch"])
-            if manifest.get("epoch_stream") is not None:
-                new_manifest["epoch_stream"] = str(manifest["epoch_stream"])
-        _commit_ann_manifest(path, manifest, new_manifest)
+        mf.carry_epoch(new_manifest, manifest, epoch, epoch_stream)
+        mf.commit(path, ANN_MANIFEST, new_manifest, planned_from=manifest)
         _sweep_stray_ann(path, new_manifest)
         return {
             "replaced": int(n_replaced),
@@ -3936,7 +3765,7 @@ def retrain_ann_index(
     import shutil
     import time
 
-    manifest = _read_ann_manifest(path)
+    manifest = mf.read(path, ANN_MANIFEST)
     if manifest is None:
         manifest = _bootstrap_ann_manifest(spark, path)
     files = [
@@ -3985,12 +3814,8 @@ def retrain_ann_index(
             frame.repartition(k, F.col(ANN_CELL_COL)).sortWithinPartitions(
                 ANN_CELL_COL, id_col
             ).write.mode("overwrite").partitionBy(ANN_CELL_COL).parquet(stage)
-            return {
-                d: sorted(names)
-                for d, names in _move_staged_cells(
-                    path, stage, gen, sub
-                ).items()
-            }
+            moved = mf.move_staged(path, stage, gen, sub, ANN_CELL_COL)
+            return {d: sorted(names) for d, names in moved.items()}
 
         new_manifest["cells"] = land(assigned, "cells")
         if has_codes:
@@ -4015,7 +3840,7 @@ def retrain_ann_index(
         ).write.mode("overwrite").parquet(os.path.join(path, cent_dir))
         new_manifest["centroids_dir"] = cent_dir
         now = time.time()
-        new_manifest["retired"] = _ann_roll_retired(
+        new_manifest["retired"] = mf.roll_retired(
             manifest,
             now,
             {
@@ -4032,11 +3857,8 @@ def retrain_ann_index(
                 "tombstones": list(manifest.get("tombstones") or []),
             },
         )
-        if manifest.get("last_epoch") is not None:
-            new_manifest["last_epoch"] = int(manifest["last_epoch"])
-        if manifest.get("epoch_stream") is not None:
-            new_manifest["epoch_stream"] = str(manifest["epoch_stream"])
-        _commit_ann_manifest(path, manifest, new_manifest)
+        mf.carry_epoch(new_manifest, manifest)
+        mf.commit(path, ANN_MANIFEST, new_manifest, planned_from=manifest)
         _sweep_stray_ann(path, new_manifest)
     finally:
         assigned.unpersist()

@@ -69,6 +69,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .. import manifest as mf
+from ..manifest import ConcurrentWriteError, _publish_lock
+
 BUCKET_COL = "_bucket"
 DEFAULT_BUCKETS = 16
 LAYOUT_FILE = "_keyed_layout.json"
@@ -355,8 +358,10 @@ def _with_bucket(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
 
 
 def _read_layout(path: str) -> dict:
-    with open(os.path.join(path, LAYOUT_FILE)) as f:
-        return json.load(f)
+    layout = mf.read(path, LAYOUT_FILE)
+    if layout is None:
+        raise FileNotFoundError(os.path.join(path, LAYOUT_FILE))
+    return layout
 
 
 def _table_schema(df: DataFrame) -> StructType:
@@ -379,171 +384,25 @@ def _write_layout(path: str, key: str, n_buckets: int, schema: StructType) -> No
     # upsert, and a concurrent reader resolves it on every read — a direct
     # truncating write exposes an empty/partial file in the truncate→write
     # window (observed as a reader JSONDecodeError under stress)
-    tmp = os.path.join(path, f".{LAYOUT_FILE}.{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "key": key,
-                "n_buckets": n_buckets,
-                "schema": schema.jsonValue(),
-                # writer-environment audit: codec-backed artifacts (e.g.
-                # thumbnails) are deterministic only per backend, so the
-                # manifest records which backend wrote this table — a
-                # mixed-backend cluster becomes detectable from the sidecars
-                "writer_env": {"image_codec": codec_backend()},
-            },
-            f,
-        )
-    os.replace(tmp, os.path.join(path, LAYOUT_FILE))
+    mf.write(
+        path,
+        LAYOUT_FILE,
+        {
+            "key": key,
+            "n_buckets": n_buckets,
+            "schema": schema.jsonValue(),
+            # writer-environment audit: codec-backed artifacts (e.g.
+            # thumbnails) are deterministic only per backend, so the
+            # manifest records which backend wrote this table — a
+            # mixed-backend cluster becomes detectable from the sidecars
+            "writer_env": {"image_codec": codec_backend()},
+        },
+    )
 
 
 def _stored_schema(layout: dict) -> StructType | None:
     raw = layout.get("schema")
     return StructType.fromJson(raw) if raw else None
-
-
-class ConcurrentWriteError(RuntimeError):
-    """Another writer rewrote one of this write's buckets between its
-    snapshot read and its publish — the merge was computed against stale
-    data and must be retried against the new table state."""
-
-
-def _read_manifest(path: str) -> dict | None:
-    try:
-        with open(os.path.join(path, MANIFEST_FILE)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
-
-
-LOCK_FILE = ".manifest_lock"
-LOCK_STALE_SECONDS = 120.0
-LOCK_WAIT_SECONDS = 30.0
-
-
-class _publish_lock:
-    """Filesystem mutex (O_EXCL create) serializing the manifest
-    read-modify-write inside ``_publish`` — held for milliseconds, never
-    across a Spark job or the vacuum's O(n_buckets) file sweep (which runs
-    after release). A lock older than LOCK_STALE_SECONDS is treated as a
-    crash leftover and broken.
-
-    Each acquisition writes an OWNER TOKEN (uuid) into the lock file:
-
-    * breaking a stale lock goes through ``os.rename`` to a unique name —
-      an atomic claim, so when N waiters race to break the same stale lock
-      exactly one wins the rename and the losers retry; the blind-unlink
-      TOCTOU (two waiters both "break" it and both acquire) cannot happen.
-      Because the staleness probe and the rename are two steps, the claim's
-      age (mtime survives rename) is RE-CHECKED after the rename: a fresh
-      lock that replaced the stale one in that window is restored via
-      ``os.link`` (atomic, refuses to clobber a third writer's lock)
-      instead of destroyed;
-    * ``__exit__`` re-reads the file and unlinks only if it still holds
-      this acquisition's token — if another writer broke our lock (e.g. we
-      were paused past staleness) we must not release THEIR lock. Safety
-      for the paused-writer case itself comes from the per-bucket
-      optimistic conflict check in ``_publish``, not the lock.
-    """
-
-    def __init__(self, path: str):
-        self.lock_path = os.path.join(path, LOCK_FILE)
-        self.token = uuid.uuid4().hex
-
-    def __enter__(self):
-        deadline = time.time() + LOCK_WAIT_SECONDS
-        while True:
-            try:
-                fd = os.open(self.lock_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, f"{self.token} {os.getpid()}".encode())
-                os.close(fd)
-                return self
-            except FileExistsError:
-                try:
-                    age = time.time() - os.path.getmtime(self.lock_path)
-                except FileNotFoundError:
-                    continue
-                if age > LOCK_STALE_SECONDS:
-                    claim = f"{self.lock_path}.break-{uuid.uuid4().hex[:8]}"
-                    try:
-                        os.rename(self.lock_path, claim)
-                    except FileNotFoundError:
-                        continue  # another waiter claimed it first
-                    # the getmtime above and the rename are not atomic: the
-                    # stale lock may have been broken AND re-acquired by
-                    # another writer in between, in which case the file we
-                    # just claimed is a FRESH lock we must not destroy.
-                    # rename preserves mtime, so re-check on the claim.
-                    try:
-                        claimed_age = time.time() - os.path.getmtime(claim)
-                    except FileNotFoundError:
-                        continue
-                    if claimed_age <= LOCK_STALE_SECONDS:
-                        # stole a live lock — put it back atomically.
-                        # os.link refuses if a third writer already
-                        # re-created the path (EEXIST): then the rightful
-                        # owner's __exit__ finds a foreign token and skips
-                        # release, and write safety still rests on the
-                        # per-bucket optimistic conflict check.
-                        try:
-                            os.link(claim, self.lock_path)
-                        except FileExistsError:
-                            pass
-                        os.unlink(claim)
-                        time.sleep(0.05)
-                        continue
-                    os.unlink(claim)
-                    continue
-                if time.time() > deadline:
-                    raise TimeoutError(
-                        f"could not acquire {self.lock_path} within "
-                        f"{LOCK_WAIT_SECONDS}s"
-                    )
-                time.sleep(0.05)
-
-    def verify_owned(self) -> None:
-        """Raise ``ConcurrentWriteError`` unless the lock file still holds
-        this acquisition's token. Called immediately before the manifest
-        replace: in the (probe→rename window)² race where a waiter
-        destroys a just-re-acquired fresh lock, the dispossessed writer
-        would otherwise proceed into the manifest read-modify-write
-        concurrently with the new owner — for DISJOINT bucket sets the
-        per-bucket conflict check cannot fire and the later write would
-        silently drop the earlier one's live entries. This check shrinks
-        the unprotected window from the whole merge to the microseconds
-        between it and ``os.replace``, which a breaker cannot cross (a
-        break requires LOCK_STALE_SECONDS of age).
-
-        A MISSING lock file gets one short retry before aborting: a breaker
-        that renamed away a just-re-acquired fresh lock restores it via
-        ``os.link`` moments later, so the rightful owner can transiently
-        observe no file at all. Without the retry that window aborts a
-        healthy publish (fails closed — safe, but spurious)."""
-        owner = self._read_owner()
-        if owner is None:
-            time.sleep(0.1)  # breaker's link-restore lands within ms
-            owner = self._read_owner()
-        if owner != self.token:
-            raise ConcurrentWriteError(
-                "publish lock was broken by another writer mid-publish; "
-                "retry the upsert against the new table state"
-            )
-
-    def _read_owner(self) -> str | None:
-        try:
-            with open(self.lock_path) as f:
-                return f.read().split()[0]
-        except (FileNotFoundError, IndexError):
-            return None
-
-    def __exit__(self, *exc):
-        owner = self._read_owner()
-        if owner != self.token:
-            return  # broken/taken by another writer; not ours to release
-        try:
-            os.unlink(self.lock_path)
-        except FileNotFoundError:
-            pass
 
 
 def _parquet_key_range(file_path: str, key: str) -> list | None:
@@ -691,8 +550,8 @@ def _delta_may_contain(rng, bloom, probe_keys) -> bool:
     return any(_bloom_contains(bloom, k) for k in in_range)
 
 
-def _snapshot_path(path: str, version: int) -> str:
-    return os.path.join(path, f"{SNAPSHOT_PREFIX}{version:08d}.json")
+def _snapshot_name(version: int) -> str:
+    return f"{SNAPSHOT_PREFIX}{version:08d}.json"
 
 
 def _snapshot_versions(path: str) -> list[int]:
@@ -717,7 +576,7 @@ def _write_snapshot(
 ) -> None:
     """Write the version's immutable snapshot sidecar (live file set plus
     the schema the version was PUBLISHED under — garbage bookkeeping stays
-    in the current manifest). Called only AFTER ``_write_manifest`` commits
+    in the current manifest). Called only AFTER the manifest write commits
     the version: a snapshot must never exist for a version the manifest
     never reached, or time travel would serve uncommitted state (a crash or
     a broken-lock abort between a premature stamp and the manifest write
@@ -768,10 +627,7 @@ def _write_snapshot(
         snap["layout"] = {"key": layout["key"], "n_buckets": layout["n_buckets"]}
     except (FileNotFoundError, KeyError):
         pass  # legacy/plain table without a layout sidecar
-    tmp = os.path.join(path, f".snap.{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        json.dump(snap, f)
-    os.replace(tmp, _snapshot_path(path, manifest["version"]))
+    mf.write(path, _snapshot_name(manifest["version"]), snap)
 
 
 def _expire_snapshots(path: str) -> None:
@@ -781,7 +637,7 @@ def _expire_snapshots(path: str) -> None:
     versions for a publish that then aborts or crashes."""
     for v in _snapshot_versions(path)[: -_keep_versions()]:
         try:
-            os.unlink(_snapshot_path(path, v))
+            os.unlink(os.path.join(path, _snapshot_name(v)))
         except FileNotFoundError:
             pass
 
@@ -796,21 +652,13 @@ def _snapshot_referenced(path: str, only: set[int] | None = None) -> set[str]:
         if only is not None and v not in only:
             continue
         try:
-            with open(_snapshot_path(path, v)) as f:
-                snap = json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
+            snap = mf.read(path, _snapshot_name(v))
+        except json.JSONDecodeError:
+            continue
+        if snap is None:
             continue
         refs.update(f"{d}/{x}" for d, fs in snap["live"].items() for x in fs)
     return refs
-
-
-def _write_manifest(path: str, manifest: dict) -> None:
-    """Atomic replace — a reader sees the old or the new manifest, never a
-    torn one."""
-    tmp = os.path.join(path, f".{MANIFEST_FILE}.{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(path, MANIFEST_FILE))
 
 
 def _bucket_dirs(path: str) -> list[str]:
@@ -841,6 +689,19 @@ def _manifest_from_listing(path: str) -> dict:
     }
     versions = _snapshot_versions(path)
     return {"live": live, "garbage": [], "version": max(versions, default=0)}
+
+
+def _check_app_meta(manifest: dict, expect: dict) -> None:
+    """Raise ``ConcurrentWriteError`` unless every ``expect`` key still
+    holds its value in the live manifest's application metadata."""
+    app_now = manifest.get("app", {})
+    for k, v in expect.items():
+        if app_now.get(k) != v:
+            raise ConcurrentWriteError(
+                f"app meta {k!r} is {app_now.get(k)!r}, expected {v!r}; the "
+                "state this write was computed from has been superseded — "
+                "recompute and retry"
+            )
 
 
 def _publish(
@@ -898,7 +759,7 @@ def _publish(
     is released (at 400k buckets an in-lock sweep would outlive
     LOCK_STALE_SECONDS and invite a legitimate-looking lock break)."""
     with _publish_lock(path) as lk:
-        manifest = _read_manifest(path) or _manifest_from_listing(path)
+        manifest = mf.read(path, MANIFEST_FILE) or _manifest_from_listing(path)
         if based_on is not None:
             for d in affected_dirs:
                 if manifest["live"].get(d, []) != based_on["live"].get(d, []):
@@ -915,14 +776,7 @@ def _publish(
             # buckets (the per-bucket check above can't see that conflict).
             # Checked before any live-tree mutation, so an abort leaves no
             # strays.
-            app_now = manifest.get("app", {})
-            for k, v in app_meta_expect.items():
-                if app_now.get(k) != v:
-                    raise ConcurrentWriteError(
-                        f"app meta {k!r} is {app_now.get(k)!r}, expected "
-                        f"{v!r}; the state this write was computed from has "
-                        "been superseded — recompute and retry"
-                    )
+            _check_app_meta(manifest, app_meta_expect)
         now = time.time()
         mor_key = None
         if append_only:
@@ -1083,7 +937,7 @@ def _publish(
         if schema is not None:
             schema = _with_seq_field(schema, bool(manifest.get("mor")))
         lk.verify_owned()  # see verify_owned: no write with a broken lock
-        _write_manifest(path, manifest)
+        mf.write(path, MANIFEST_FILE, manifest)
         # COMMIT POINT. Only now publish the version's time-travel snapshot
         # and expire displaced ones: an abort/crash above must never leave
         # a phantom snapshot (uncommitted version readable) nor have
@@ -1172,7 +1026,7 @@ def write_keyed_table(
     if app_meta:
         manifest["app"] = dict(app_meta)
     _bump_version(manifest, time.time())  # a fresh table's initial load is v1
-    _write_manifest(path, manifest)
+    mf.write(path, MANIFEST_FILE, manifest)
     _write_snapshot(path, manifest, schema)  # post-commit, like _publish
 
 
@@ -1474,16 +1328,7 @@ def read_keyed_table(
         restrict = sorted(probe_map)
     manifest = None
     if version is not None:
-        try:
-            with open(_snapshot_path(path, version)) as f:
-                manifest = json.load(f)
-        except FileNotFoundError:
-            retained = _snapshot_versions(path)
-            raise ValueError(
-                f"version {version} is not retained at {path}; retained "
-                f"versions: {retained} (SPARK_GRAFT_SINK_KEEP_VERSIONS="
-                f"{_keep_versions()})"
-            ) from None
+        manifest = _version_manifest(path, version)
         if manifest.get("schema"):
             schema = StructType.fromJson(manifest["schema"])
         if keys is not None and manifest.get("layout") is not None:
@@ -1508,7 +1353,7 @@ def read_keyed_table(
                     "different bucketing function"
                 )
     if manifest is None:
-        manifest = _read_manifest(path)
+        manifest = mf.read(path, MANIFEST_FILE)
     df = _resolved_state(
         spark,
         path,
@@ -1541,7 +1386,7 @@ def current_version(path: str) -> int:
     invalidate→recompute window of ``pipeline.run_incremental`` — for as
     long as the version stays retained (``SPARK_GRAFT_SINK_KEEP_VERSIONS``)
     plus the GC grace window after it expires."""
-    manifest = _read_manifest(path)
+    manifest = mf.read(path, MANIFEST_FILE)
     return int(manifest.get("version", 0)) if manifest else 0
 
 
@@ -1551,7 +1396,7 @@ def table_app_meta(path: str) -> dict:
     (``app_meta=`` on ``write_keyed_table``/``upsert_parquet``), so a
     consumer cursor stored here can never disagree with the data it
     describes — the Delta ``txn`` pattern for exactly-once folds."""
-    manifest = _read_manifest(path)
+    manifest = mf.read(path, MANIFEST_FILE)
     return dict(manifest.get("app", {})) if manifest else {}
 
 
@@ -1561,9 +1406,10 @@ def table_history(path: str) -> list[dict]:
     out = []
     for v in _snapshot_versions(path):
         try:
-            with open(_snapshot_path(path, v)) as f:
-                snap = json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
+            snap = mf.read(path, _snapshot_name(v))
+        except json.JSONDecodeError:
+            continue
+        if snap is None:
             continue
         out.append(
             {
@@ -1581,15 +1427,14 @@ CHANGE_TYPE_COL = "_change_type"
 
 
 def _version_manifest(path: str, version: int) -> dict:
-    try:
-        with open(_snapshot_path(path, version)) as f:
-            return json.load(f)
-    except FileNotFoundError:
+    snap = mf.read(path, _snapshot_name(version))
+    if snap is None:
         raise ValueError(
             f"version {version} is not retained at {path}; retained "
             f"versions: {_snapshot_versions(path)} "
             f"(SPARK_GRAFT_SINK_KEEP_VERSIONS={_keep_versions()})"
-        ) from None
+        )
+    return snap
 
 
 def read_changes(
@@ -1660,7 +1505,7 @@ def read_changes(
     if to_version is not None:
         to_man = _version_manifest(path, to_version)
     else:
-        to_man = _read_manifest(path)
+        to_man = mf.read(path, MANIFEST_FILE)
         if to_man is None:
             raise ValueError(f"no committed manifest at {path}")
     if int(to_man["version"]) < from_version:
@@ -1700,7 +1545,7 @@ def read_changes(
     # opened at all. Entries live in the CURRENT manifest and are pruned
     # in sync with version retention, so a retained window is a readable
     # window.
-    cdc_map = (_read_manifest(path) or {}).get("cdc", {})
+    cdc_map = (mf.read(path, MANIFEST_FILE) or {}).get("cdc", {})
     window = [str(v) for v in range(from_version + 1, int(to_man["version"]) + 1)]
     if window and all(v in cdc_map for v in window):
         files = [
@@ -1938,7 +1783,7 @@ def _read_live(
     moral equivalent of partition pruning."""
     reader = spark.read.schema(schema) if schema else spark.read
     if manifest is None:
-        manifest = _read_manifest(path)
+        manifest = mf.read(path, MANIFEST_FILE)
     if manifest is None:  # legacy table without a manifest sidecar
         df = reader.parquet(path)
         return df.where(F.col(BUCKET_COL).isin(buckets)) if buckets else df
@@ -1971,21 +1816,12 @@ def commit_app_meta(
     semantics as the data commits; the version records an EMPTY change
     list so feed readers skip it without opening files. No garbage
     processing here — the next data publish runs the GC pipeline."""
-    import time as _time
-
     with _publish_lock(path) as lk:
-        manifest = _read_manifest(path) or _manifest_from_listing(path)
+        manifest = mf.read(path, MANIFEST_FILE) or _manifest_from_listing(path)
         if app_meta_expect is not None:
-            app_now = manifest.get("app", {})
-            for k, v in app_meta_expect.items():
-                if app_now.get(k) != v:
-                    raise ConcurrentWriteError(
-                        f"app meta {k!r} is {app_now.get(k)!r}, expected "
-                        f"{v!r}; the state this commit was computed from "
-                        "has been superseded — recompute and retry"
-                    )
+            _check_app_meta(manifest, app_meta_expect)
         manifest.setdefault("app", {}).update(app_meta)
-        _bump_version(manifest, _time.time())
+        _bump_version(manifest, time.time())
         if _cdc_capture_enabled():
             manifest.setdefault("cdc", {})[str(manifest["version"])] = []
         try:
@@ -1995,7 +1831,7 @@ def commit_app_meta(
         if schema is not None:
             schema = _with_seq_field(schema, bool(manifest.get("mor")))
         lk.verify_owned()
-        _write_manifest(path, manifest)
+        mf.write(path, MANIFEST_FILE, manifest)
         _write_snapshot(path, manifest, schema)
         _expire_snapshots(path)
 
@@ -2143,7 +1979,7 @@ def _append_partial_delta(
     preimages — the read this path exists to delete); feed windows
     containing this version are served by ``read_changes``' partial-aware
     append fast path, O(changed keys) at read time."""
-    snapshot = _read_manifest(path) or _manifest_from_listing(path)
+    snapshot = mf.read(path, MANIFEST_FILE) or _manifest_from_listing(path)
     stamped = u.withColumn(
         SEQ_COL, F.lit(int(snapshot.get("version", 0)) + 1).cast("long")
     ).repartition(max(len(affected), 1), F.col(BUCKET_COL))
@@ -2229,7 +2065,7 @@ def _merge_and_publish(
     # the manifest snapshot this merge is computed FROM: both the target
     # read and the publish-time conflict check use this one snapshot, so a
     # concurrent rewrite of an affected bucket is detected (not merged over)
-    snapshot = _read_manifest(path) or _manifest_from_listing(path)
+    snapshot = mf.read(path, MANIFEST_FILE) or _manifest_from_listing(path)
     aff_dirs = [f"{BUCKET_COL}={b}" for b in affected]
     dirty_aff = [d for d in (snapshot.get("mor") or {}) if d in set(aff_dirs)]
     if _dirty_has_partial(snapshot, dirty_aff):
@@ -2422,7 +2258,7 @@ def delete_keys(
         affected = [
             r[BUCKET_COL] for r in k.select(BUCKET_COL).distinct().collect()
         ]
-        snapshot = _read_manifest(path) or _manifest_from_listing(path)
+        snapshot = mf.read(path, MANIFEST_FILE) or _manifest_from_listing(path)
         mor = _sink_write_mode(mode) == "mor"
         if mor:
             out = k.withColumn(
@@ -2515,7 +2351,7 @@ def needs_compaction(
     ``if needs_compaction(p): compact_keyed_table(spark, p)`` instead of
     compacting on a timer."""
     try:
-        manifest = _read_manifest(path)
+        manifest = mf.read(path, MANIFEST_FILE)
     except FileNotFoundError:
         return False
     if not manifest or not manifest.get("live"):
@@ -2563,7 +2399,7 @@ def choose_compaction(
             os.environ.get("SPARK_GRAFT_COMPACT_EXPECTED_READS", "8")
         )
     fixed = float(os.environ.get("SPARK_GRAFT_COMPACT_TAX_BYTES", str(256 << 10)))
-    manifest = _read_manifest(path)
+    manifest = mf.read(path, MANIFEST_FILE)
     if not manifest or not manifest.get("live"):
         return []
     ledger = manifest.get("mor") or {}
@@ -2609,7 +2445,7 @@ def compact_keyed_table(
     ``choose_compaction`` policy's output) — selective maintenance whose
     cost tracks the chosen buckets, not the table."""
     layout = _read_layout(path)  # asserts this IS a keyed table; untouched
-    manifest = _read_manifest(path) or _manifest_from_listing(path)
+    manifest = mf.read(path, MANIFEST_FILE) or _manifest_from_listing(path)
     # multi-file buckets, plus SINGLE-file buckets whose one file is a MoR
     # delta (an insert into a previously empty bucket): those carry real
     # _seq values, and folding every ledger entry is what lets _publish

@@ -159,9 +159,10 @@ def apply_index_batch(
     the upstream curation dedup). One maintaining stream per index at a
     time remains the operating contract, same as any single-writer sink.
     Returns whether the batch was applied (False = replay skipped)."""
-    from ..operators.search import _read_index_manifest, append_text_index
+    from ..manifest import read
+    from ..operators.search import INDEX_MANIFEST, append_text_index
 
-    manifest = _read_index_manifest(index_path)
+    manifest = read(index_path, INDEX_MANIFEST)
     if _epoch_is_replay(manifest, epoch_id, stream_id):
         return False
     append_text_index(
@@ -243,9 +244,10 @@ def apply_ann_index_batch(
     never compared). New vectors are assigned to the FROZEN centroids
     (the IVF maintenance trade — monitor recall drift and rebuild past
     the threshold). Returns whether the batch was applied."""
-    from ..operators.similarity import _read_ann_manifest, append_ann_index
+    from ..manifest import read
+    from ..operators.similarity import ANN_MANIFEST, append_ann_index
 
-    manifest = _read_ann_manifest(index_path)
+    manifest = read(index_path, ANN_MANIFEST)
     if _epoch_is_replay(manifest, epoch_id, stream_id):
         return False
     append_ann_index(

@@ -26,11 +26,13 @@ from __future__ import annotations
 
 import logging
 import os
+import time
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .. import manifest as mf
 from ..operators import dedup as _dedup
 from ..operators import search as _search
 from ..operators import similarity as _sim
@@ -87,36 +89,33 @@ def _window(
     return int(start), int(cur)
 
 
-def _commit_text_cursor(spark, index_path: str, epoch: int, stream: str):
-    """Cursor-only manifest bump for a window the text index applies
-    nothing from — every other key carries forward unchanged."""
-    import time
-
-    man = _search._read_index_manifest(index_path)
-    if man is None:
-        man = _search._bootstrap_index_manifest(spark, index_path)
-    new = dict(man)
+def _commit_cursor(
+    spark, index_path: str, name: str, epoch: int, stream: str, id_col=None
+) -> None:
+    """Cursor-only manifest bump for a window an index applies nothing
+    from — every other key carries forward unchanged, and the commit is
+    version-checked like the index's own ops (a concurrent maintenance op
+    aborts loudly rather than losing it). ``name`` picks the index: the
+    text and vector manifests roll their retired ledger; the band index's
+    meta is adopted first and keeps no ledger."""
+    if name == _dedup.NEARDUP_META:
+        man = _dedup._adopt_neardup_meta(spark, index_path, id_col)
+        new = dict(man)
+    else:
+        boot = (
+            _search._bootstrap_index_manifest
+            if name == _search.INDEX_MANIFEST
+            else _sim._bootstrap_ann_manifest
+        )
+        man = mf.read(index_path, name) or boot(spark, index_path)
+        new = {**man, "retired": mf.roll_retired(man, time.time())}
     new["version"] = int(man.get("version", 1)) + 1
-    new["retired"] = _search._roll_retired(man, time.time(), None)
-    new["last_epoch"] = int(epoch)
-    new["epoch_stream"] = str(stream)
-    _search._write_index_manifest(index_path, new)
-
-
-def _commit_ann_cursor(spark, index_path: str, epoch: int, stream: str):
-    """The vector edition of ``_commit_text_cursor`` (optimistic commit —
-    a concurrent maintenance op aborts loudly rather than losing it)."""
-    import time
-
-    man = _sim._read_ann_manifest(index_path)
-    if man is None:
-        man = _sim._bootstrap_ann_manifest(spark, index_path)
-    new = dict(man)
-    new["version"] = int(man.get("version", 1)) + 1
-    new["retired"] = _sim._ann_roll_retired(man, time.time(), None)
-    new["last_epoch"] = int(epoch)
-    new["epoch_stream"] = str(stream)
-    _sim._commit_ann_manifest(index_path, man, new)
+    mf.commit(
+        index_path,
+        name,
+        mf.carry_epoch(new, man, epoch, stream),
+        planned_from=man,
+    )
 
 
 def _split_changes(changes: DataFrame, id_col: str, cols: list[str]):
@@ -167,7 +166,7 @@ def sync_text_index(
     start, cur = _window(
         spark,
         table_path,
-        _cursor(_search._read_index_manifest(index_path), stream),
+        _cursor(mf.read(index_path, _search.INDEX_MANIFEST), stream),
         from_version,
         "sync_text_index",
     )
@@ -215,7 +214,7 @@ def sync_text_index(
         # nothing this index applies (empty window, or deletes of docs it
         # never indexed) — still advance the cursor, or it wedges once
         # version retention prunes `start`
-        _commit_text_cursor(spark, index_path, cur, stream)
+        _commit_cursor(spark, index_path, _search.INDEX_MANIFEST, cur, stream)
     return {
         "from": start,
         "to": cur,
@@ -243,7 +242,7 @@ def sync_ann_index(
     start, cur = _window(
         spark,
         table_path,
-        _cursor(_sim._read_ann_manifest(index_path), stream),
+        _cursor(mf.read(index_path, _sim.ANN_MANIFEST), stream),
         from_version,
         "sync_ann_index",
     )
@@ -281,7 +280,7 @@ def sync_ann_index(
         applied = n_deleted > 0
     if not applied:
         # cursor-only bump: see sync_text_index (the wedge guard)
-        _commit_ann_cursor(spark, index_path, cur, stream)
+        _commit_cursor(spark, index_path, _sim.ANN_MANIFEST, cur, stream)
     n_split = 0
     if auto_split and applied:
         n_split = split_synced_ann_cells(spark, index_path, id_col=id_col)
@@ -321,7 +320,7 @@ def split_synced_ann_cells(
     )
     total_split = 0
     for _ in range(_SPLIT_MAX_PASSES):
-        man = _sim._read_ann_manifest(index_path)
+        man = mf.read(index_path, _sim.ANN_MANIFEST)
         if man is None:
             return total_split
         total = sum(
@@ -363,7 +362,7 @@ def sync_neardup_index(
     ``build_neardup_index`` over the table's resolved state (pinned in
     tests) — at O(changed docs) shingle/minhash cost plus one live-id
     locate."""
-    meta = _dedup._read_neardup_meta(index_path) or {}
+    meta = mf.read(index_path, _dedup.NEARDUP_META) or {}
     id_col = id_col or meta.get("id_col") or "doc_id"
     text_col = text_col or meta.get("text_col") or "text"
     stream = cdc_stream_id(table_path)
@@ -382,13 +381,10 @@ def sync_neardup_index(
     ups, up_ids, dels = _split_changes(changes, id_col, [text_col])
     n_up = len(up_ids)
     if not n_up and not dels:
-        # cursor-only bump (the wedge guard, meta edition; checked commit)
-        meta = _dedup._adopt_neardup_meta(spark, index_path, id_col)
-        planned_from = dict(meta)
-        meta["version"] = int(meta["version"]) + 1
-        meta["last_epoch"] = int(cur)
-        meta["epoch_stream"] = str(stream)
-        _dedup._commit_neardup_meta(index_path, planned_from, meta)
+        # cursor-only bump (the wedge guard, meta edition)
+        _commit_cursor(
+            spark, index_path, _dedup.NEARDUP_META, cur, stream, id_col
+        )
         return {"from": start, "to": cur, "deleted": 0, "upserted": 0}
     res = _dedup.upsert_neardup_docs(
         spark,
@@ -432,7 +428,7 @@ def sync_dedup_clusters(
     bridge deletions are the operator module's documented trade."""
     from ..operators import clusters as C
 
-    meta = _dedup._read_neardup_meta(index_path) or {}
+    meta = mf.read(index_path, _dedup.NEARDUP_META) or {}
     id_col = id_col or meta.get("id_col") or "doc_id"
     text_col = text_col or meta.get("text_col") or "text"
     stream = cdc_stream_id(table_path)
@@ -736,12 +732,12 @@ def maintain_index(
     content_col = emb_col if kind == "ann" else text_col
     stream = cdc_stream_id(table_path)
     if kind == "text":
-        committed = _cursor(_search._read_index_manifest(index_path), stream)
+        committed = _cursor(mf.read(index_path, _search.INDEX_MANIFEST), stream)
     elif kind == "ann":
-        committed = _cursor(_sim._read_ann_manifest(index_path), stream)
+        committed = _cursor(mf.read(index_path, _sim.ANN_MANIFEST), stream)
     elif kind == "neardup":
         committed = _cursor(
-            _dedup._read_neardup_meta(index_path) or {}, stream
+            mf.read(index_path, _dedup.NEARDUP_META) or {}, stream
         )
     else:
         committed = _clusters.cluster_cursor(index_path, stream)
@@ -796,9 +792,9 @@ def maintain_index(
             snap.select(id_col, text_col), index_path,
             text_col=text_col, id_col=id_col,
         )
-        _commit_text_cursor(spark, index_path, cur, stream)
+        _commit_cursor(spark, index_path, _search.INDEX_MANIFEST, cur, stream)
     elif kind == "ann":
-        man = _sim._read_ann_manifest(index_path)
+        man = mf.read(index_path, _sim.ANN_MANIFEST)
         if n_cells is None:
             n_cells = int(man["n_cells"]) if man else 16
         # a live pq sidecar survives the rebuild (same sub-quantizer
@@ -811,7 +807,7 @@ def maintain_index(
             pq=bool((man or {}).get("pq")),
             pq_m=pq_params.get("m"), pq_ksub=pq_params.get("ksub"),
         )
-        _commit_ann_cursor(spark, index_path, cur, stream)
+        _commit_cursor(spark, index_path, _sim.ANN_MANIFEST, cur, stream)
     elif kind == "neardup":
         _dedup.build_neardup_index(
             snap.select(id_col, text_col), index_path,

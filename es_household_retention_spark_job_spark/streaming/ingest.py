@@ -107,13 +107,8 @@ def apply_keyed_batch(
     import time as _time
     import uuid as _uuid
 
-    from ..sinks.upsert import (
-        DEFAULT_BUCKETS,
-        LOCK_STALE_SECONDS,
-        ConcurrentWriteError,
-        table_app_meta,
-        upsert_parquet,
-    )
+    from ..manifest import LOCK_STALE_SECONDS, ConcurrentWriteError
+    from ..sinks.upsert import DEFAULT_BUCKETS, table_app_meta, upsert_parquet
 
     n_buckets = DEFAULT_BUCKETS if n_buckets is None else n_buckets
     exists = _os.path.exists(path)

@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from es_household_retention_spark_job_spark import manifest as MF
 from es_household_retention_spark_job_spark.operators import similarity as S
 from es_household_retention_spark_job_spark.sources.tpch import load_table
 
@@ -288,10 +289,10 @@ def test_retrain_reshapes_and_purges(spark, embs, tmp_path):
     S.build_ann_index(base, idx, n_cells=4, iters=2, pq=True)
     dead = _dead_ids(embs)
     S.delete_ann_ids(spark, idx, dead)
-    books_before = S._read_pq_books(spark, idx, S._read_ann_manifest(idx))
+    books_before = S._read_pq_books(spark, idx, MF.read(idx, S.ANN_MANIFEST))
     k = S.retrain_ann_index(spark, idx, n_cells=8, iters=2)
     assert k == 8
-    man = S._read_ann_manifest(idx)
+    man = MF.read(idx, S.ANN_MANIFEST)
     assert man["n_cells"] == 8
     assert man["centroids_dir"].startswith("centroids_gen-")
     assert "tombstones" not in man  # the rewrite purged everything

@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from es_household_retention_spark_job_spark import manifest as MF
 from es_household_retention_spark_job_spark.operators import similarity as S
 from es_household_retention_spark_job_spark.sources.tpch import load_table
 
@@ -194,7 +195,7 @@ def test_route_pq_tier_and_auto_dispatch(spark, embs, tmp_path):
     # corpus the build-time calibration marks breach (the floor-holding
     # rerank erases the payload advantage), so pq stays out of the
     # default route without an explicit tiers= opt-in
-    assert S._read_ann_manifest(idx)["pq_calibration"]["breach"] is True
+    assert MF.read(idx, S.ANN_MANIFEST)["pq_calibration"]["breach"] is True
     r3, _, _ = S.choose_ann_route(
         spark, idx, queries, k=5, n_probe=12, with_plan=True,
     )
@@ -245,7 +246,7 @@ def test_pq_calibration_recall_guard(spark, embs, tmp_path):
     # --- near-orthogonal: breach, router refuses, forced path still safe
     no_idx = str(tmp_path / "no_idx")
     S.build_ann_index(embs, no_idx, n_cells=16, iters=3, pq=True)
-    calib = S._read_ann_manifest(no_idx)["pq_calibration"]
+    calib = MF.read(no_idx, S.ANN_MANIFEST)["pq_calibration"]
     assert calib["breach"] is True
     queries = embs.where(F.col("vec_id") % 10 == 0)
     route, _, _ = S.choose_ann_route(spark, no_idx, queries, k=5)
@@ -257,7 +258,7 @@ def test_pq_calibration_recall_guard(spark, embs, tmp_path):
     cl = clustered_embeddings(spark).cache()
     cl_idx = str(tmp_path / "cl_idx")
     S.build_ann_index(cl, cl_idx, n_cells=16, pq=True)
-    calib_cl = S._read_ann_manifest(cl_idx)["pq_calibration"]
+    calib_cl = MF.read(cl_idx, S.ANN_MANIFEST)["pq_calibration"]
     assert calib_cl["breach"] is False
     assert calib_cl["measured_recall_bp"] >= 9000
     cq = cl.where(F.col("vec_id") % 10 == 0)

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from es_household_retention_spark_job_spark import manifest as MF
 from es_household_retention_spark_job_spark.operators import dedup as D
 from es_household_retention_spark_job_spark.operators import multimodal as M
 from es_household_retention_spark_job_spark.operators import similarity as S
@@ -1104,14 +1105,12 @@ def test_ann_index_append_equals_same_centroid_build(spark, embs, tmp_path):
     before = rows(S.knn_ivf_indexed(spark, idx, queries, k=5))
 
     # crashed append: no manifest replace -> old state intact
-    real = S._write_ann_manifest
-
-    def boom(path_, manifest):
+    def boom(path_, name, obj):
         raise RuntimeError("injected ann commit failure")
 
     import unittest.mock as mock
 
-    with mock.patch.object(S, "_write_ann_manifest", boom):
+    with mock.patch.object(MF, "write", boom):
         with _pytest.raises(RuntimeError, match="injected ann commit"):
             S.append_ann_index(delta, idx)
     assert rows(S.knn_ivf_indexed(spark, idx, queries, k=5)) == before
@@ -1229,7 +1228,7 @@ def test_ann_legacy_bootstrap_excludes_crashed_append_strays(spark, embs, tmp_pa
 
     idx = str(tmp_path / "ann_legacy")
     S.build_ann_index(embs, idx, n_cells=8, iters=2)
-    committed = S._read_ann_manifest(idx)["cells"]
+    committed = MF.read(idx, S.ANN_MANIFEST)["cells"]
 
     # make the index legacy, then inject a crashed-append stray
     os.unlink(os.path.join(idx, S.ANN_MANIFEST))
@@ -1299,9 +1298,9 @@ def test_knn_sq8_indexed_recall_and_pruning(spark, embs, tmp_path):
     legacy = str(tmp_path / "sq8legacy")
     shutil.copytree(idx, legacy)
     shutil.rmtree(os.path.join(legacy, "codes"))
-    m = S._read_ann_manifest(legacy)
+    m = MF.read(legacy, S.ANN_MANIFEST)
     del m["codes"]
-    S._write_ann_manifest(legacy, m)
+    MF.write(legacy, S.ANN_MANIFEST, m)
     with pytest.raises(ValueError, match="no SQ8 codes"):
         S.knn_sq8_indexed(spark, legacy, queries, k=5)
 
@@ -1338,7 +1337,7 @@ def test_compact_ann_index_preserves_results_with_grace(
     for r in (1, 2):
         S.append_ann_index(embs.where(F.col("vec_id") % 3 == r), idx)
 
-    m_before = S._read_ann_manifest(idx)
+    m_before = MF.read(idx, S.ANN_MANIFEST)
     assert any(len(fs) > 1 for fs in m_before["cells"].values())
     assert any(len(fs) > 1 for fs in m_before["codes"].values())
     old_files = {
@@ -1364,7 +1363,7 @@ def test_compact_ann_index_preserves_results_with_grace(
     want = rows()
     n = S.compact_ann_index(spark, idx)
     assert n > 0
-    m_after = S._read_ann_manifest(idx)
+    m_after = MF.read(idx, S.ANN_MANIFEST)
     assert all(len(fs) == 1 for fs in m_after["cells"].values())
     assert all(len(fs) == 1 for fs in m_after["codes"].values())
     assert rows() == want
@@ -1419,7 +1418,7 @@ def test_ann_cell_health_and_split(spark, embs, tmp_path):
     # 4 cells over the full corpus -> every cell is fat relative to a low
     # bound, guaranteeing splits without synthetic skew
     S.build_ann_index(embs, idx, n_cells=4, iters=3)
-    man = S._read_ann_manifest(idx)
+    man = MF.read(idx, S.ANN_MANIFEST)
     total = embs.count()
     assert sum(int(v) for v in man["cell_rows"].values()) == total
     # ledger vs reality
@@ -1446,7 +1445,7 @@ def test_ann_cell_health_and_split(spark, embs, tmp_path):
     n_split = S.split_ann_cells(spark, idx, max_rows_per_cell=total // 8)
     assert n_split == len(health["oversized"])
 
-    man2 = S._read_ann_manifest(idx)
+    man2 = MF.read(idx, S.ANN_MANIFEST)
     assert man2["n_cells"] == 4 + n_split
     assert man2["centroids_dir"].startswith("centroids_gen-")
     # old centroid generation retired (grace), new one live with k+splits rows
@@ -1597,27 +1596,27 @@ def test_ann_maintenance_concurrent_commit_detected(spark, embs, tmp_path):
     d2 = embs.where(F.col("vec_id") % 3 == 0).where(F.col("vec_id") % 2 == 1)
     S.build_ann_index(base, idx, n_cells=4, iters=2)
 
-    real_commit = S._commit_ann_manifest
+    real_commit = MF.commit
     fired = {}
 
-    def racing_commit(path_, planned_from, new_manifest):
+    def racing_commit(path_, name, new_manifest, planned_from=None):
         # simulate a concurrent append landing between this op's manifest
         # read and its commit — exactly once
         if not fired.get("done"):
             fired["done"] = True
             S.append_ann_index(d2, idx)
-        return real_commit(path_, planned_from, new_manifest)
+        return real_commit(path_, name, new_manifest, planned_from)
 
-    with mock.patch.object(S, "_commit_ann_manifest", racing_commit):
+    with mock.patch.object(MF, "commit", racing_commit):
         with _pytest.raises(ConcurrentWriteError, match="committed concurrently"):
             S.append_ann_index(d1, idx)
     # the RACING append's vectors are committed and searchable; the aborted
     # one left only invisible strays, and a retry lands cleanly
-    man = S._read_ann_manifest(idx)
+    man = MF.read(idx, S.ANN_MANIFEST)
     n_live = sum(int(v) for v in man["cell_rows"].values())
     assert n_live == base.count() + d2.count()
     S.append_ann_index(d1, idx)
-    man = S._read_ann_manifest(idx)
+    man = MF.read(idx, S.ANN_MANIFEST)
     assert sum(int(v) for v in man["cell_rows"].values()) == embs.count()
 
 
@@ -1924,7 +1923,7 @@ def test_knn_sq8_indexed_filtered_equals_filtered_index(
     S.build_ann_index(embs, idx, n_cells=8, iters=2)
     # reference: an index over ONLY the allowed rows, same centroids
     # (so cell assignment — and therefore full-probe coverage — agree)
-    cents = S._read_centroids(spark, idx, S._read_ann_manifest(idx))
+    cents = S._read_centroids(spark, idx, MF.read(idx, S.ANN_MANIFEST))
     ref = str(tmp_path / "ref")
     S.build_ann_index(
         embs.join(F.broadcast(allowed), "vec_id", "left_semi"),

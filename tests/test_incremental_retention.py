@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from es_household_retention_spark_job_spark import manifest as MF
 from es_household_retention_spark_job_spark.pipeline import (
     run_incremental,
     run_retention,
@@ -337,7 +338,7 @@ def test_flagship_loop_defaults_to_mor(spark, tmp_path, monkeypatch):
     default (read-optimized tables), the env var remains the operator
     override, and an explicit write_mode= wins over both."""
     from es_household_retention_spark_job_spark.sinks.upsert import (
-        _read_manifest,
+        MANIFEST_FILE,
         _sink_write_mode,
     )
 
@@ -359,7 +360,7 @@ def test_flagship_loop_defaults_to_mor(spark, tmp_path, monkeypatch):
     run_incremental(spark, p_inc, e_inc, delta, FIXTURE_CLIENT, FIXTURE_AS_OF)
     # the maintenance publish landed as MoR deltas (manifest ledger), and
     # the reconciled state equals the CoW from-scratch reference
-    assert _read_manifest(p_inc).get("mor"), "flagship publish was not MoR"
+    assert MF.read(p_inc, MANIFEST_FILE).get("mor"), "flagship publish was not MoR"
     assert _state(spark, p_inc) == want
 
     # explicit write_mode="cow" overrides the flagship default
@@ -371,5 +372,5 @@ def test_flagship_loop_defaults_to_mor(spark, tmp_path, monkeypatch):
         spark, p2, e2, delta, FIXTURE_CLIENT, FIXTURE_AS_OF,
         write_mode="cow",
     )
-    assert not (_read_manifest(p2) or {}).get("mor")
+    assert not (MF.read(p2, MANIFEST_FILE) or {}).get("mor")
     assert _state(spark, p2) == want

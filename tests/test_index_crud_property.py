@@ -16,6 +16,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from es_household_retention_spark_job_spark import manifest as MF
 from es_household_retention_spark_job_spark.operators import search as SE
 from es_household_retention_spark_job_spark.operators import similarity as S
 from es_household_retention_spark_job_spark.sources.tpch import load_table
@@ -57,7 +58,7 @@ def test_ann_crud_random_sequence_matches_model(spark, tmp_path):
         )
 
     def check():
-        man = S._read_ann_manifest(idx)
+        man = MF.read(idx, S.ANN_MANIFEST)
         got = _pairs(
             S.knn_ivf_indexed(
                 spark, idx, queries, k=3, n_probe=int(man["n_cells"])
@@ -109,7 +110,7 @@ def test_ann_crud_random_sequence_matches_model(spark, tmp_path):
     check()
     # the pq sidecar stayed consistent through the whole history: the ADC
     # tier still mirrors every cells/ dir and serves without error
-    man = S._read_ann_manifest(idx)
+    man = MF.read(idx, S.ANN_MANIFEST)
     assert set(man["pq"]) == set(man["cells"])
     assert S.knn_pq_indexed(
         spark, idx, queries, k=3, n_probe=int(man["n_cells"]), refine=24

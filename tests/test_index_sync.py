@@ -9,6 +9,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from es_household_retention_spark_job_spark import manifest as MF
 from es_household_retention_spark_job_spark.operators import search as SE
 from es_household_retention_spark_job_spark.operators import similarity as S
 from es_household_retention_spark_job_spark.sinks import upsert as U
@@ -104,7 +105,7 @@ def test_sync_ann_index_follows_table(spark, tmp_path):
     S.build_ann_index(
         U.read_keyed_table(spark, table), idx, n_cells=8, iters=2, pq=True
     )
-    man0 = S._read_ann_manifest(idx)
+    man0 = MF.read(idx, S.ANN_MANIFEST)
     cents = S._read_centroids(spark, idx, man0)
 
     changed = embs.where(F.col("vec_id") % 31 == 5).select(
@@ -183,7 +184,7 @@ def test_sync_scoped_and_cursor_advances_on_inapplicable_window(
     U.write_keyed_table(wide, table, key="doc_id", n_buckets=4)
     v0 = U.current_version(table)
     SE.build_text_index(U.read_keyed_table(spark, table), idx)
-    v_idx0 = SE._read_index_manifest(idx)["version"]
+    v_idx0 = MF.read(idx, SE.INDEX_MANIFEST)["version"]
 
     # window: flip the unrelated flag on some docs + delete an id the
     # index never contained — nothing for the text index to apply
@@ -195,14 +196,14 @@ def test_sync_scoped_and_cursor_advances_on_inapplicable_window(
     )
     out = sync_text_index(spark, idx, table, from_version=v0)
     assert out["upserted"] == 0 and out["deleted"] == 0
-    man = SE._read_index_manifest(idx)
+    man = MF.read(idx, SE.INDEX_MANIFEST)
     # cursor committed without touching content (one cursor-only bump)
     assert man["last_epoch"] == U.current_version(table)
     assert man["version"] == v_idx0 + 1
     # and a re-sync is a clean no-op (no from_version needed, no bump)
     out2 = sync_text_index(spark, idx, table)
     assert out2["from"] == out2["to"]
-    assert SE._read_index_manifest(idx)["version"] == v_idx0 + 1
+    assert MF.read(idx, SE.INDEX_MANIFEST)["version"] == v_idx0 + 1
 
 
 def test_sync_neardup_index_follows_table(spark, tmp_path):
@@ -309,7 +310,7 @@ def test_neardup_rebuild_is_the_purge(spark, tmp_path):
     assert D.delete_neardup_docs(spark, idx, target) == len(target)
     # rebuild over the FULL corpus (the deleted docs are back in scope)
     D.build_neardup_index(docs, idx)
-    meta = D._read_neardup_meta(idx)
+    meta = MF.read(idx, D.NEARDUP_META)
     assert meta["tombstones"] == [] and meta["sync"] == []
     assert not os.path.isdir(os.path.join(idx, "tombstones"))
     after = {
@@ -351,7 +352,7 @@ def test_neardup_upsert_resurrects_legacy_forever_tombstone(spark, tmp_path):
     assert D.delete_neardup_docs(spark, idx, target) == 1
     # fabricate the legacy state: strip versioning from the ledger and
     # the meta (as a pre-r12 index would carry it)
-    meta = D._read_neardup_meta(idx)
+    meta = MF.read(idx, D.NEARDUP_META)
     tomb_dir = os.path.join(idx, "tombstones")
     import pyarrow.parquet as pq
 
@@ -365,7 +366,7 @@ def test_neardup_upsert_resurrects_legacy_forever_tombstone(spark, tmp_path):
     meta.pop("tombstones")
     meta.pop("sync", None)
     meta.pop("version", None)
-    D._write_neardup_meta(idx, meta)
+    MF.write(idx, D.NEARDUP_META, meta)
     assert target[0] not in dup_of()  # legacy semantics: hidden
 
     # re-insert with changed text through the upsert
@@ -403,7 +404,7 @@ def test_neardup_concurrent_commit_detected(spark, tmp_path):
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
     idx = str(tmp_path / "idx")
     D.build_neardup_index(docs, idx)
-    stale = D._read_neardup_meta(idx)
+    stale = MF.read(idx, D.NEARDUP_META)
     # a real commit moves the version...
     dup = sorted(
         {
@@ -417,8 +418,11 @@ def test_neardup_concurrent_commit_detected(spark, tmp_path):
     assert D.delete_neardup_docs(spark, idx, dup) == 1
     # ...so the stale plan must abort loudly
     with pytest.raises(ConcurrentWriteError, match="concurrently"):
-        D._commit_neardup_meta(
-            idx, stale, {**stale, "version": int(stale["version"]) + 1}
+        MF.commit(
+            idx,
+            D.NEARDUP_META,
+            {**stale, "version": int(stale["version"]) + 1},
+            planned_from=stale,
         )
 
 
@@ -434,20 +438,20 @@ def test_neardup_rebuild_clamps_cursor_to_corpus_snapshot(spark, tmp_path):
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
     idx = str(tmp_path / "idx")
     D.build_neardup_index(docs, idx)
-    pre = D._read_neardup_meta(idx)
+    pre = MF.read(idx, D.NEARDUP_META)
     pre["last_epoch"] = 9  # a sync committed AFTER the corpus was read
     pre["epoch_stream"] = "cdc:/t"
-    D._write_neardup_meta(idx, pre)
+    MF.write(idx, D.NEARDUP_META, pre)
     # the corpus snapshot only absorbed epochs ≤ 7 → cursor winds back
     D.build_neardup_index(docs, idx, as_of_epoch=7)
-    meta = D._read_neardup_meta(idx)
+    meta = MF.read(idx, D.NEARDUP_META)
     assert meta["last_epoch"] == 7 and meta["epoch_stream"] == "cdc:/t"
     # a snapshot AHEAD of the live cursor never advances it (min, not set)
-    pre2 = D._read_neardup_meta(idx)
+    pre2 = MF.read(idx, D.NEARDUP_META)
     pre2["last_epoch"] = 5
-    D._write_neardup_meta(idx, pre2)
+    MF.write(idx, D.NEARDUP_META, pre2)
     D.build_neardup_index(docs, idx, as_of_epoch=11)
-    assert D._read_neardup_meta(idx)["last_epoch"] == 5
+    assert MF.read(idx, D.NEARDUP_META)["last_epoch"] == 5
 
 
 def test_neardup_rebuild_bumps_version_so_stale_racers_abort(
@@ -478,22 +482,23 @@ def test_neardup_rebuild_bumps_version_so_stale_racers_abort(
         }
     )[:1]
     assert D.delete_neardup_docs(spark, idx, dup) == 1
-    pre = D._read_neardup_meta(idx)
+    pre = MF.read(idx, D.NEARDUP_META)
     pre["last_epoch"] = 7  # a cursor the rebuild must carry
     pre["epoch_stream"] = "cdc:/t"
-    D._write_neardup_meta(idx, pre)
+    MF.write(idx, D.NEARDUP_META, pre)
     # the racer plans from the pre-rebuild meta...
-    stale = D._read_neardup_meta(idx)
+    stale = MF.read(idx, D.NEARDUP_META)
     D.build_neardup_index(docs, idx)
-    meta = D._read_neardup_meta(idx)
+    meta = MF.read(idx, D.NEARDUP_META)
     assert int(meta["version"]) > int(stale["version"])
     assert meta["last_epoch"] == 7 and meta["epoch_stream"] == "cdc:/t"
     # ...and must abort now that the rebuild committed a newer generation
     with pytest.raises(ConcurrentWriteError, match="concurrently"):
-        D._commit_neardup_meta(
+        MF.commit(
             idx,
-            stale,
+            D.NEARDUP_META,
             {**stale, "version": int(stale["version"]) + 1},
+            planned_from=stale,
         )
 
 
@@ -514,7 +519,7 @@ def test_neardup_legacy_adopt_commits_meta_gating_crash_strays(
     idx = str(tmp_path / "idx")
     D.build_neardup_index(docs, idx)
     # fabricate the legacy layout: plain base/, no meta
-    meta = D._read_neardup_meta(idx)
+    meta = MF.read(idx, D.NEARDUP_META)
     shutil.move(
         os.path.join(idx, meta["base_dir"]), os.path.join(idx, "base")
     )
@@ -533,7 +538,7 @@ def test_neardup_legacy_adopt_commits_meta_gating_crash_strays(
     assert before
     # the adopt (first step of every maintenance op) commits a meta
     adopted = D._adopt_neardup_meta(spark, idx, "doc_id")
-    assert D._read_neardup_meta(idx) is not None
+    assert MF.read(idx, D.NEARDUP_META) is not None
     assert adopted["tombstones"] == [] and adopted["sync"] == []
     # simulate the crash window: a landed-but-never-committed tombstone
     target = sorted(before)[:1]
@@ -580,7 +585,7 @@ def test_neardup_upsert_isin_cap_falls_back_to_joins(
     target = sorted(dup_of())[:1]
     assert D.delete_neardup_docs(spark, idx, target) == 1
     # make the ledger entry a LEGACY forever one (strip the version)
-    meta = D._read_neardup_meta(idx)
+    meta = MF.read(idx, D.NEARDUP_META)
     tomb_dir = os.path.join(idx, "tombstones")
     for f in meta["tombstones"]:
         pth = os.path.join(tomb_dir, f)
@@ -612,24 +617,24 @@ def test_neardup_adopt_race_does_not_clobber_committed_meta(
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
     idx = str(tmp_path / "idx")
     D.build_neardup_index(docs, idx)
-    committed = D._read_neardup_meta(idx)
+    committed = MF.read(idx, D.NEARDUP_META)
     committed["version"] = 7  # a racer's later commit
     committed["tombstones"] = ["gen-racer-00000.parquet"]
-    D._write_neardup_meta(idx, committed)
-    orig = D._read_neardup_meta
+    MF.write(idx, D.NEARDUP_META, committed)
+    orig = MF.read
     calls = {"n": 0}
 
-    def stale_first(path):
+    def stale_first(path, name):
         calls["n"] += 1
         if calls["n"] == 1:
             return None  # the adopter's pre-lock read: no meta yet
-        return orig(path)
+        return orig(path, name)
 
-    monkeypatch.setattr(D, "_read_neardup_meta", stale_first)
+    monkeypatch.setattr(MF, "read", stale_first)
     adopted = D._adopt_neardup_meta(spark, idx, "doc_id")
-    monkeypatch.setattr(D, "_read_neardup_meta", orig)
+    monkeypatch.setattr(MF, "read", orig)
     # the adopter LOST: the live meta is untouched and was returned
-    live = D._read_neardup_meta(idx)
+    live = MF.read(idx, D.NEARDUP_META)
     assert live["version"] == 7
     assert live["tombstones"] == ["gen-racer-00000.parquet"]
     assert adopted["version"] == 7
@@ -649,7 +654,7 @@ def test_neardup_rebuild_sweep_spares_fresh_stray_generations(
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
     idx = str(tmp_path / "idx")
     D.build_neardup_index(docs, idx)
-    old_base = D._read_neardup_meta(idx)["base_dir"]
+    old_base = MF.read(idx, D.NEARDUP_META)["base_dir"]
     racer = os.path.join(idx, "base-racerfresh")
     os.makedirs(racer)  # fresh mtime: a rebuild mid-stage
     crashed = os.path.join(idx, "base-crashedold")
@@ -951,7 +956,7 @@ def test_maintain_index_ann_rebuild_keeps_geometry_and_cursor(
     U.upsert_parquet(spark, table, shifted, key="vec_id")
     out = maintain_index(spark, "ann", idx, table, from_version=v0)
     assert out["route"] == "rebuild"
-    man = S._read_ann_manifest(idx)
+    man = MF.read(idx, S.ANN_MANIFEST)
     assert int(man["n_cells"]) == 8  # geometry preserved
     assert maintain_index(spark, "ann", idx, table)["route"] == "none"
     # full-probe serving equals exact brute force over the resolved table
@@ -992,7 +997,7 @@ def test_sync_ann_auto_split_tracks_corpus_sqrt(spark, tmp_path, monkeypatch):
     U.upsert_parquet(spark, table, grown, key="vec_id")
     out = sync_ann_index(spark, idx, table, from_version=v0)
     assert out["upserted"] > 0 and out["cells_split"] == 0
-    assert int(S._read_ann_manifest(idx)["n_cells"]) == 4
+    assert int(MF.read(idx, S.ANN_MANIFEST)["n_cells"]) == 4
 
     # lowered guard: the next window triggers √n splits
     monkeypatch.setenv("SPARK_GRAFT_ANN_SPLIT_MIN_BOUND", "64")
@@ -1002,7 +1007,7 @@ def test_sync_ann_auto_split_tracks_corpus_sqrt(spark, tmp_path, monkeypatch):
     U.upsert_parquet(spark, table, more, key="vec_id")
     out2 = sync_ann_index(spark, idx, table)
     assert out2["cells_split"] > 0
-    man = S._read_ann_manifest(idx)
+    man = MF.read(idx, S.ANN_MANIFEST)
     n_cells = int(man["n_cells"])
     assert n_cells > 4
     # converged: another maintenance call makes no further progress
@@ -1014,7 +1019,7 @@ def test_sync_ann_auto_split_tracks_corpus_sqrt(spark, tmp_path, monkeypatch):
     )
 
     assert split_synced_ann_cells(spark, idx) == 0
-    man = S._read_ann_manifest(idx)
+    man = MF.read(idx, S.ANN_MANIFEST)
     rows = S._manifest_cell_rows(spark, idx, man)
     total = sum(int(n) for n in rows.values())
     bound = max(int(2 * total**0.5), 64)
@@ -1235,14 +1240,14 @@ def test_sync_serving_stack_text_failure_spares_other_structures(
     with pytest.raises(RuntimeError, match="text sync failed"):
         _stack(spark, table, paths, from_version=v0)
     assert index_sync._cursor(
-        S._read_ann_manifest(paths["ann"]), stream
+        MF.read(paths["ann"], S.ANN_MANIFEST), stream
     ) == cur
     assert index_sync._cursor(
-        D._read_neardup_meta(paths["neardup"]), stream
+        MF.read(paths["neardup"], D.NEARDUP_META), stream
     ) == cur
     assert C.cluster_cursor(paths["clusters"], stream) == cur
     assert index_sync._cursor(
-        SE._read_index_manifest(paths["text"]), stream
+        MF.read(paths["text"], SE.INDEX_MANIFEST), stream
     ) is None
 
     monkeypatch.undo()

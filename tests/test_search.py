@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from es_household_retention_spark_job_spark import manifest as MF
 from es_household_retention_spark_job_spark.entry_queries import (
     EXTRA_ORACLE_SQL,
     EXTRA_QUERIES,
@@ -305,12 +306,12 @@ def test_append_text_index_equals_full_rebuild(spark, tmp_path):
     # corpus's per-term doc counts (spot-check via a full rebuild);
     # current generations resolve through the manifest
     from es_household_retention_spark_job_spark.operators.search import (
-        _read_index_manifest,
+        INDEX_MANIFEST,
     )
 
     full = str(tmp_path / "full_index")
     build_text_index(docs, full)
-    m_inc, m_full = _read_index_manifest(idx), _read_index_manifest(full)
+    m_inc, m_full = MF.read(idx, INDEX_MANIFEST), MF.read(full, INDEX_MANIFEST)
     s_inc = spark.read.parquet(f"{idx}/{m_inc['stats']}").collect()[0]
     s_full = spark.read.parquet(f"{full}/{m_full['stats']}").collect()[0]
     assert (s_inc["n_docs"], s_inc["total_dl"], s_inc["n_shards"]) == (
@@ -460,17 +461,17 @@ def test_index_append_is_reader_atomic(spark, tmp_path, monkeypatch):
     # (a) plan now, append, collect later -> old state
     pinned = SE.bm25_search_indexed(spark, idx, BM25_QUERIES, k=BM25_K)
     # (b) crashed append: fail AT the manifest replace (the commit point)
-    real_write = SE._write_index_manifest
+    real_write = MF.write
 
-    def boom(path_, manifest):
+    def boom(path_, name, obj):
         raise RuntimeError("injected index commit failure")
 
-    monkeypatch.setattr(SE, "_write_index_manifest", boom)
+    monkeypatch.setattr(MF, "write", boom)
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError, match="injected index commit"):
         SE.append_text_index(delta, idx)
-    monkeypatch.setattr(SE, "_write_index_manifest", real_write)
+    monkeypatch.setattr(MF, "write", real_write)
     assert rows(SE.bm25_search_indexed(spark, idx, BM25_QUERIES, k=BM25_K)) == want_old
 
     # (c) successful append: pinned plan still old, fresh plan merged
@@ -631,7 +632,7 @@ def test_indexed_empty_results_are_type_correct(spark, tmp_path):
         spark.createDataFrame([(1, "alpha beta")], "doc_id long, text string"),
         tiny_idx,
     )
-    m = SE._read_index_manifest(tiny_idx)
+    m = MF.read(tiny_idx, SE.INDEX_MANIFEST)
     populated = set(m["tf"])
     probe = next(
         t
@@ -654,19 +655,16 @@ def test_indexed_empty_results_are_type_correct(spark, tmp_path):
 
     # crashed-append stray sweep
     delta1 = docs.where(F.col("doc_id") % 97 == 0)
-    real = SE._write_index_manifest
     import unittest.mock as mock
 
-    with mock.patch.object(
-        SE, "_write_index_manifest", side_effect=RuntimeError("boom")
-    ):
+    with mock.patch.object(MF, "write", side_effect=RuntimeError("boom")):
         import pytest as _pytest
 
         with _pytest.raises(RuntimeError):
             SE.append_text_index(delta1, idx)
 
     def stray_count():
-        m = SE._read_index_manifest(idx)
+        m = MF.read(idx, SE.INDEX_MANIFEST)
         ref = {(d, f) for d, fs in m["tf"].items() for f in fs}
         on_disk = {
             (d, f)
@@ -707,7 +705,7 @@ def test_compact_text_index_preserves_results_with_grace(
     for r in (1, 2, 3):
         SE.append_text_index(docs.where(F.col("doc_id") % 4 == r), idx)
 
-    m_before = SE._read_index_manifest(idx)
+    m_before = MF.read(idx, SE.INDEX_MANIFEST)
     assert any(len(fs) > 1 for fs in m_before["tf"].values())
     old_files = {
         (d, f) for d, fs in m_before["tf"].items() for f in fs if len(fs) > 1
@@ -724,7 +722,7 @@ def test_compact_text_index_preserves_results_with_grace(
     want = rows()
     n = SE.compact_text_index(spark, idx)
     assert n > 0
-    m_after = SE._read_index_manifest(idx)
+    m_after = MF.read(idx, SE.INDEX_MANIFEST)
     assert all(len(fs) == 1 for fs in m_after["tf"].values())
     replaced = {d: fs for d, fs in m_before["tf"].items() if len(fs) > 1}
     assert any(
@@ -766,14 +764,14 @@ def test_compact_text_index_preserves_results_with_grace(
         idx,
     )
     assert not (old_files & on_disk())
-    m_now = SE._read_index_manifest(idx)
+    m_now = MF.read(idx, SE.INDEX_MANIFEST)
     assert all(e.get("tf") != replaced for e in m_now.get("retired", []))
 
     # the appends re-fragmented the shards they touched; one more
     # compaction round settles them, after which compaction is a no-op
     SE.compact_text_index(spark, idx)
     SE.compact_text_index(spark, idx)
-    m = SE._read_index_manifest(idx)
+    m = MF.read(idx, SE.INDEX_MANIFEST)
     assert all(len(fs) == 1 for fs in m["tf"].values())
 
 
@@ -803,7 +801,7 @@ def test_legacy_bootstrap_excludes_crashed_append_strays(spark, tmp_path):
     # make the index legacy (no manifest, plain df/stats dirs), then
     # inject a crashed-append stray: an existing tf file duplicated under
     # a gen- name
-    m0 = SE._read_index_manifest(idx)
+    m0 = MF.read(idx, SE.INDEX_MANIFEST)
     os.rename(os.path.join(idx, m0["df"]), os.path.join(idx, "df"))
     os.rename(os.path.join(idx, m0["stats"]), os.path.join(idx, "stats"))
     os.unlink(os.path.join(idx, SE.INDEX_MANIFEST))
@@ -951,7 +949,7 @@ def test_append_overlap_check_catches_resent_docs(spark, tmp_path):
     docs = _corpus(spark)
     idx = str(tmp_path / "guard_idx")
     SE.build_text_index(docs, idx, n_shards=4)
-    m_before = SE._read_index_manifest(idx)
+    m_before = MF.read(idx, SE.INDEX_MANIFEST)
 
     resent = spark.createDataFrame(
         [(2, "a resent document"), (99, "a new one")],
@@ -959,27 +957,27 @@ def test_append_overlap_check_catches_resent_docs(spark, tmp_path):
     )
     with _pytest.raises(ValueError, match="1 delta id"):
         SE.append_text_index(resent, idx, check_overlap=True)
-    assert SE._read_index_manifest(idx) == m_before  # nothing landed
+    assert MF.read(idx, SE.INDEX_MANIFEST) == m_before  # nothing landed
 
     fresh = spark.createDataFrame(
         [(99, "a brand new document")], "doc_id long, text string"
     )
     SE.append_text_index(fresh, idx, check_overlap=True)
-    assert SE._read_index_manifest(idx)["version"] == m_before["version"] + 1
+    assert MF.read(idx, SE.INDEX_MANIFEST)["version"] == m_before["version"] + 1
 
     # ANN twin
     embs = load_table(spark, SF_DIR, "embeddings")
     aidx = str(tmp_path / "guard_ann")
     S.build_ann_index(embs.where(F.col("vec_id") < 400), aidx, n_cells=4, iters=1)
-    am = S._read_ann_manifest(aidx)
+    am = MF.read(aidx, S.ANN_MANIFEST)
     overlap = embs.where(F.col("vec_id").isin([10, 999991]))
     with _pytest.raises(ValueError, match="delta id"):
         S.append_ann_index(overlap, aidx, check_overlap=True)
-    assert S._read_ann_manifest(aidx) == am
+    assert MF.read(aidx, S.ANN_MANIFEST) == am
     S.append_ann_index(
         embs.where(F.col("vec_id").between(400, 450)), aidx, check_overlap=True
     )
-    assert S._read_ann_manifest(aidx)["version"] == am["version"] + 1
+    assert MF.read(aidx, S.ANN_MANIFEST)["version"] == am["version"] + 1
 
 
 def test_bm25_zipf_matches_oracle(spark, duck):
@@ -1002,3 +1000,48 @@ def test_mlt_zipf_matches_oracle(spark, duck):
         EXTRA_ORACLE_SQL["mlt_search_zipf"],
         min_rows=1,
     )
+
+
+def test_text_index_race_aborts_instead_of_losing_update(
+    spark, tmp_path, monkeypatch
+):
+    """Two maintainers on one text index: an op that PLANNED from the
+    manifest a racer has since replaced must abort with
+    ConcurrentWriteError at its commit and leave the racer's manifest
+    live — never overwrite it and silently drop the racer's update. The
+    op's first manifest read is stubbed to return the pre-racer
+    manifest, so the race is deterministic."""
+    import pytest as _pytest
+
+    from es_household_retention_spark_job_spark.manifest import (
+        ConcurrentWriteError,
+    )
+    from es_household_retention_spark_job_spark.operators import search as SE
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} alpha beta w{i % 7} v{i % 5}") for i in range(60)],
+        "doc_id long, text string",
+    )
+    idx = str(tmp_path / "race_idx")
+    SE.build_text_index(docs.where("doc_id < 50"), idx, n_shards=4)
+    pre = MF.read(idx, SE.INDEX_MANIFEST)
+    # the racer: another maintainer's cursor-only commit
+    racer = {**pre, "version": pre["version"] + 1, "last_epoch": 9}
+    MF.commit(idx, SE.INDEX_MANIFEST, dict(racer), planned_from=pre)
+
+    orig = MF.read
+    for op in (
+        lambda: SE.append_text_index(docs.where("doc_id >= 50"), idx),
+        lambda: SE.delete_text_docs(spark, idx, [3, 4]),
+    ):
+        calls = {"n": 0}
+
+        def stale_first(path, name):
+            calls["n"] += 1
+            return dict(pre) if calls["n"] == 1 else orig(path, name)
+
+        monkeypatch.setattr(MF, "read", stale_first)
+        with _pytest.raises(ConcurrentWriteError, match="concurrently"):
+            op()
+        monkeypatch.setattr(MF, "read", orig)
+        assert MF.read(idx, SE.INDEX_MANIFEST) == racer

@@ -13,6 +13,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from es_household_retention_spark_job_spark import manifest as MF
 from es_household_retention_spark_job_spark.operators.sessionize import session_stats
 from es_household_retention_spark_job_spark.sources.tpch import load_table
 from es_household_retention_spark_job_spark.streaming import ingest, stateful, windows
@@ -535,7 +536,7 @@ def test_streaming_index_maintenance_matches_batch(spark, tmp_path):
 
     # replay idempotence: re-applying the last committed epoch FROM THE
     # SAME STREAM IDENTITY is a no-op
-    m = SE._read_index_manifest(idx)
+    m = MF.read(idx, SE.INDEX_MANIFEST)
     last_epoch = m["last_epoch"]
     sid = str(tmp_path / "idx_ckpt")  # the maintenance sink's identity
     assert m["epoch_stream"] == sid
@@ -546,7 +547,7 @@ def test_streaming_index_maintenance_matches_batch(spark, tmp_path):
         doc_stream.apply_index_batch(replay, last_epoch, idx, stream_id=sid)
         is False
     )
-    assert SE._read_index_manifest(idx) == m  # manifest untouched
+    assert MF.read(idx, SE.INDEX_MANIFEST) == m  # manifest untouched
     # a NEW epoch from the same stream applies
     assert doc_stream.apply_index_batch(
         spark.createDataFrame(
@@ -556,7 +557,7 @@ def test_streaming_index_maintenance_matches_batch(spark, tmp_path):
         idx,
         stream_id=sid,
     ) is True
-    assert SE._read_index_manifest(idx)["last_epoch"] == last_epoch + 1
+    assert MF.read(idx, SE.INDEX_MANIFEST)["last_epoch"] == last_epoch + 1
     # an ANONYMOUS call against an identified-stream manifest must NOT
     # treat the (incomparable) epoch counters as a replay — even epoch 0
     # appends rather than being silently dropped
@@ -567,7 +568,7 @@ def test_streaming_index_maintenance_matches_batch(spark, tmp_path):
         0,
         idx,
     ) is True
-    m2 = SE._read_index_manifest(idx)
+    m2 = MF.read(idx, SE.INDEX_MANIFEST)
     # the anonymous epoch commits WITHOUT inheriting the old stream label
     # (labeling it would make the identified stream's next batch look
     # like a replay)
@@ -655,7 +656,7 @@ def test_ann_streaming_maintenance(spark, tmp_path):
     assert sq8 == sq8_full and sq8
 
     # replay idempotence through the ANN epoch guard
-    m = S._read_ann_manifest(idx)
+    m = MF.read(idx, S.ANN_MANIFEST)
     sid = str(tmp_path / "vec_ckpt")
     assert m["epoch_stream"] == sid
     replay = spark.createDataFrame(
@@ -668,7 +669,7 @@ def test_ann_streaming_maintenance(spark, tmp_path):
         )
         is False
     )
-    assert S._read_ann_manifest(idx) == m
+    assert MF.read(idx, S.ANN_MANIFEST) == m
 
 
 def test_keyed_table_sink_stream_to_fold(spark, tmp_path):
@@ -768,7 +769,7 @@ def test_keyed_table_sink_auto_compact(spark, tmp_path, monkeypatch):
     from pyspark.sql import types as T
 
     from es_household_retention_spark_job_spark.sinks.upsert import (
-        _read_manifest,
+        MANIFEST_FILE,
         needs_compaction,
         read_keyed_table,
     )
@@ -810,7 +811,7 @@ def test_keyed_table_sink_auto_compact(spark, tmp_path, monkeypatch):
     want["k9"] = 9
     assert got == want
     # every applied batch's deltas were folded: no dirty buckets remain
-    assert not _read_manifest(tbl).get("mor")
+    assert not MF.read(tbl, MANIFEST_FILE).get("mor")
     assert needs_compaction(tbl) is False
 
 

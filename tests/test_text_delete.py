@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from es_household_retention_spark_job_spark import manifest as MF
 from es_household_retention_spark_job_spark.entry_queries_docs import (
     BM25_K,
     BM25_QUERIES,
@@ -188,7 +189,7 @@ def test_upsert_text_docs_matches_rebuild(spark, docs, tmp_path):
 
     # compaction purges the whole history and results stay identical
     assert SE.compact_text_index(spark, idx) > 0
-    assert "tombstones" not in SE._read_index_manifest(idx)
+    assert "tombstones" not in MF.read(idx, SE.INDEX_MANIFEST)
     final = _res(SE.bm25_search_indexed(spark, idx, queries, k=BM25_K))
     assert final == want
 
@@ -259,7 +260,7 @@ def test_tf_bloom_prunes_locate(spark, docs, tmp_path):
     assert b1.count() and b2.count()
     SE.append_text_index(b1, idx)
     SE.append_text_index(b2, idx)
-    man = SE._read_index_manifest(idx)
+    man = MF.read(idx, SE.INDEX_MANIFEST)
     assert man.get("tf_bloom"), "append recorded no blooms"
     n_files = sum(len(fs) for fs in man["tf"].values())
     n_bloomed = len(man["tf_bloom"])
@@ -274,7 +275,7 @@ def test_tf_bloom_prunes_locate(spark, docs, tmp_path):
     assert SE.delete_text_docs(spark, idx, target) == 1
     # deleting never-indexed ids: every bloomed file skippable, count 0
     files2, skipped2 = SE._locate_tf_files(
-        idx, SE._read_index_manifest(idx), [99_999_991]
+        idx, MF.read(idx, SE.INDEX_MANIFEST), [99_999_991]
     )
     assert skipped2 >= n_bloomed - 1  # target file-set shrinks to ~build files
     assert SE.delete_text_docs(spark, idx, [99_999_991]) == 0
@@ -282,7 +283,7 @@ def test_tf_bloom_prunes_locate(spark, docs, tmp_path):
     # compaction rewrites multi-file shards; stale bloom entries drop and
     # results stay rebuild-equal (scores checked via the existing oracle)
     SE.compact_text_index(spark, idx)
-    man3 = SE._read_index_manifest(idx)
+    man3 = MF.read(idx, SE.INDEX_MANIFEST)
     live = {f"{d}/{f}" for d, fs in man3["tf"].items() for f in fs}
     assert set(man3.get("tf_bloom") or {}) <= live
 
@@ -306,7 +307,7 @@ def test_tf_zone_maps_prune_past_bloom_cap(spark, docs, tmp_path, monkeypatch):
     assert lo.count() > 1 and hi.count() > 1
     SE.append_text_index(lo, idx)
     SE.append_text_index(hi, idx)
-    man = SE._read_index_manifest(idx)
+    man = MF.read(idx, SE.INDEX_MANIFEST)
     assert not (man.get("tf_bloom") or {}), "cap should suppress blooms"
     assert man.get("tf_zone"), "appends recorded no zone maps"
     # a hi-range target prunes the lo-range generation files entirely
@@ -316,18 +317,18 @@ def test_tf_zone_maps_prune_past_bloom_cap(spark, docs, tmp_path, monkeypatch):
     assert SE.delete_text_docs(spark, idx, target) == 1
     # an out-of-range id prunes EVERY zoned generation file
     files2, skipped2 = SE._locate_tf_files(
-        idx, SE._read_index_manifest(idx), [99_999_991]
+        idx, MF.read(idx, SE.INDEX_MANIFEST), [99_999_991]
     )
     assert skipped2 >= len(man["tf_zone"]) - 1
     assert SE.delete_text_docs(spark, idx, [99_999_991]) == 0
     # a NON-INT target id disables the zone prune (conservative), never
     # a wrong skip
     files3, skipped3 = SE._locate_tf_files(
-        idx, SE._read_index_manifest(idx), ["not-an-int"]
+        idx, MF.read(idx, SE.INDEX_MANIFEST), ["not-an-int"]
     )
     assert skipped3 == 0
     # zone ledger follows the live file set across compaction
     SE.compact_text_index(spark, idx)
-    man3 = SE._read_index_manifest(idx)
+    man3 = MF.read(idx, SE.INDEX_MANIFEST)
     live = {f"{d}/{f}" for d, fs in man3["tf"].items() for f in fs}
     assert set(man3.get("tf_zone") or {}) <= live

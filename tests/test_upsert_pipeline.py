@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from es_household_retention_spark_job_spark import manifest as MF
 from es_household_retention_spark_job_spark.operators.retention import (
     HouseholdRetentionNotReadyError,
 )
@@ -77,11 +78,11 @@ def test_compaction_single_file_per_bucket_same_data(spark, tmp_path, monkeypatc
     # see); adopt them via the legacy-table bootstrap — the migration path
     # for tables written before manifests existed
     from es_household_retention_spark_job_spark.sinks.upsert import (
+        MANIFEST_FILE,
         _manifest_from_listing,
-        _write_manifest,
     )
 
-    _write_manifest(path, _manifest_from_listing(path))
+    MF.write(path, MANIFEST_FILE, _manifest_from_listing(path))
     spark.catalog.refreshByPath(path)
     before = {r["k"]: r["v"] for r in read_keyed_table(spark, path).collect()}
     assert len(before) == 80
@@ -369,7 +370,7 @@ def test_concurrent_disjoint_writers_both_land_overlap_rejected(spark, tmp_path)
     from es_household_retention_spark_job_spark.sinks.upsert import (
         ConcurrentWriteError,
         _manifest_from_listing,
-        _read_manifest,
+        MANIFEST_FILE,
         _publish,
     )
 
@@ -383,9 +384,9 @@ def test_concurrent_disjoint_writers_both_land_overlap_rejected(spark, tmp_path)
     # writer A snapshots, then writer B lands an upsert first
     import copy
 
-    snap_a = copy.deepcopy(_read_manifest(path))
+    snap_a = copy.deepcopy(MF.read(path, MANIFEST_FILE))
     upsert_parquet(spark, path, spark.createDataFrame([("k0", 100)], "k string, v int"), key="k")
-    after_b = _read_manifest(path)
+    after_b = MF.read(path, MANIFEST_FILE)
     b_bucket = next(
         d for d in snap_a["live"] if snap_a["live"][d] != after_b["live"][d]
     )
@@ -401,7 +402,7 @@ def test_concurrent_disjoint_writers_both_land_overlap_rejected(spark, tmp_path)
     src_file = after_b["live"][other][0]
     shutil.copyfile(f"{path}/{other}/{src_file}", f"{tmp_pub}/{other}/part-0.parquet")
     _publish(path, tmp_pub, [other], based_on=snap_a)
-    now = _read_manifest(path)
+    now = MF.read(path, MANIFEST_FILE)
     assert now["live"][b_bucket] == after_b["live"][b_bucket]  # B preserved
     assert now["live"][other] == ["gen-" + now["live"][other][0].split("-", 1)[1]]
     got = {r["k"]: r["v"] for r in read_keyed_table(spark, path).collect()}
@@ -413,10 +414,10 @@ def test_concurrent_disjoint_writers_both_land_overlap_rejected(spark, tmp_path)
         f"{path}/{b_bucket}/{after_b['live'][b_bucket][0]}",
         f"{tmp_pub}2/{b_bucket}/part-0.parquet",
     )
-    before = _read_manifest(path)
+    before = MF.read(path, MANIFEST_FILE)
     with pytest.raises(ConcurrentWriteError):
         _publish(path, str(tmp_path / "staged2"), [b_bucket], based_on=snap_a)
-    assert _read_manifest(path) == before
+    assert MF.read(path, MANIFEST_FILE) == before
 
 
 def test_lock_token_ownership_and_atomic_break(tmp_path):
@@ -428,11 +429,11 @@ def test_lock_token_ownership_and_atomic_break(tmp_path):
     import os
     import time
 
-    from es_household_retention_spark_job_spark.sinks.upsert import (
+    from es_household_retention_spark_job_spark.manifest import (
         LOCK_FILE,
         LOCK_STALE_SECONDS,
-        _publish_lock,
     )
+    from es_household_retention_spark_job_spark.sinks.upsert import _publish_lock
 
     path = str(tmp_path)
     lock_path = os.path.join(path, LOCK_FILE)
@@ -518,12 +519,12 @@ def test_paused_writer_broken_lock_conflict_detected(spark, tmp_path):
     import os
     import time
 
+    from es_household_retention_spark_job_spark.manifest import LOCK_FILE
     from es_household_retention_spark_job_spark.sinks.upsert import (
+        MANIFEST_FILE,
         ConcurrentWriteError,
-        LOCK_FILE,
         _publish,
         _publish_lock,
-        _read_manifest,
     )
 
     path = str(tmp_path / "tbl")
@@ -533,7 +534,7 @@ def test_paused_writer_broken_lock_conflict_detected(spark, tmp_path):
         key="k",
         n_buckets=2,
     )
-    snap_a = copy.deepcopy(_read_manifest(path))
+    snap_a = copy.deepcopy(MF.read(path, MANIFEST_FILE))
 
     # A acquires the publish lock (simulating mid-publish) and stalls
     a = _publish_lock(path)
@@ -546,7 +547,7 @@ def test_paused_writer_broken_lock_conflict_detected(spark, tmp_path):
     upsert_parquet(
         spark, path, spark.createDataFrame([("a", 100)], "k string, v int"), key="k"
     )
-    after_b = _read_manifest(path)
+    after_b = MF.read(path, MANIFEST_FILE)
     changed = [d for d in snap_a["live"] if snap_a["live"][d] != after_b["live"][d]]
     assert changed  # B really rewrote a bucket
 
@@ -554,12 +555,12 @@ def test_paused_writer_broken_lock_conflict_detected(spark, tmp_path):
     # its own), and its stale-snapshot publish on the overlapping bucket
     # must abort before any manifest change
     a.__exit__()
-    assert _read_manifest(path) == after_b
+    assert MF.read(path, MANIFEST_FILE) == after_b
     staged = str(tmp_path / "staged")
     os.makedirs(os.path.join(staged, changed[0]))
     with pytest.raises(ConcurrentWriteError):
         _publish(path, staged, [changed[0]], based_on=snap_a)
-    assert _read_manifest(path) == after_b
+    assert MF.read(path, MANIFEST_FILE) == after_b
     got = {r["k"]: r["v"] for r in read_keyed_table(spark, path).collect()}
     assert got == {"a": 100, "b": 2, "c": 3}
 
@@ -636,7 +637,7 @@ def test_vacuum_runs_outside_publish_lock(spark, tmp_path, monkeypatch):
     real_vacuum = U._vacuum
 
     def spy(p, manifest, deletable=None):
-        seen["lock_held"] = os.path.exists(os.path.join(p, U.LOCK_FILE))
+        seen["lock_held"] = os.path.exists(os.path.join(p, MF.LOCK_FILE))
         seen["n_deletable"] = len(deletable or [])
         return real_vacuum(p, manifest, deletable)
 
@@ -646,7 +647,7 @@ def test_vacuum_runs_outside_publish_lock(spark, tmp_path, monkeypatch):
     )
     assert seen["lock_held"] is False
     assert seen["n_deletable"] >= 1  # grace 0: the superseded file
-    m = U._read_manifest(path)
+    m = MF.read(path, U.MANIFEST_FILE)
     assert m["garbage"] == []  # pruned in-lock
     # and the superseded physical files are gone
     live = {f"{d}/{f}" for d, fs in m["live"].items() for f in fs}
@@ -780,18 +781,20 @@ def test_aborted_publish_leaves_no_phantom_snapshot(spark, tmp_path, monkeypatch
     )  # v2 — retention 2 means the NEXT publish would expire v1
     assert U._snapshot_versions(path) == [1, 2]
 
-    real_write = U._write_manifest
+    real_write = MF.write
 
-    def boom(path_, manifest):
+    def boom(path_, name, obj):
+        if name != U.MANIFEST_FILE:
+            return real_write(path_, name, obj)
         raise RuntimeError("injected commit failure")
 
-    monkeypatch.setattr(U, "_write_manifest", boom)
+    monkeypatch.setattr(MF, "write", boom)
     with pytest.raises(RuntimeError, match="injected commit failure"):
         upsert_parquet(
             spark, path,
             spark.createDataFrame([("a", 3)], "k string, v int"), key="k",
         )
-    monkeypatch.setattr(U, "_write_manifest", real_write)
+    monkeypatch.setattr(MF, "write", real_write)
 
     # no phantom v3 snapshot, no premature expiry of v1, manifest still v2
     assert U._snapshot_versions(path) == [1, 2]
@@ -844,17 +847,17 @@ def test_expired_version_files_get_post_expiry_grace(spark, tmp_path, monkeypatc
     )  # v2: v1's file becomes garbage, pinned by v1's snapshot (window 2)
 
     # age every garbage entry far past the grace window while still pinned
-    m = U._read_manifest(path)
+    m = MF.read(path, U.MANIFEST_FILE)
     for g in m["garbage"]:
         g["ts"] = time.time() - 10_000
-    U._write_manifest(path, m)
+    MF.write(path, U.MANIFEST_FILE, m)
 
     upsert_parquet(
         spark, path, spark.createDataFrame([("a", 3)], "k string, v int"), key="k"
     )  # v3: v1 EXPIRES here — its file is past-grace AND newly unpinned
 
     assert v1_files <= on_disk(), "post-expiry grace violated: file deleted at expiry"
-    m = U._read_manifest(path)
+    m = MF.read(path, U.MANIFEST_FILE)
     v1_rels = {g["rel"] for g in m["garbage"] if g["rel"] in {f for f in v1_files}}
     assert any(
         time.time() - g["ts"] < 60
@@ -916,7 +919,7 @@ def test_mor_upsert_appends_deltas_and_preserves_semantics(
     import os
 
     from es_household_retention_spark_job_spark.sinks.upsert import (
-        _read_manifest,
+        MANIFEST_FILE,
     )
 
     path = str(tmp_path / "mor_tbl")
@@ -924,7 +927,7 @@ def test_mor_upsert_appends_deltas_and_preserves_semantics(
         [(f"k{i}", i, f"w{i}") for i in range(200)], "k string, v int, w string"
     )
     write_keyed_table(base, path, key="k", n_buckets=4)
-    m0 = _read_manifest(path)
+    m0 = MF.read(path, MANIFEST_FILE)
     base_files = {d: list(fs) for d, fs in m0["live"].items()}
 
     _mor(monkeypatch)
@@ -935,7 +938,7 @@ def test_mor_upsert_appends_deltas_and_preserves_semantics(
         key="k",
         n_buckets=4,
     )
-    m1 = _read_manifest(path)
+    m1 = MF.read(path, MANIFEST_FILE)
     # every base file is still live and untouched; delta files appended
     for d, fs in base_files.items():
         assert set(fs) <= set(m1["live"][d]), d
@@ -981,7 +984,7 @@ def test_mor_compaction_folds_deltas(spark, tmp_path, monkeypatch):
     rows, writes one file per bucket, and the table reads identically
     before and after; idempotent."""
     from es_household_retention_spark_job_spark.sinks.upsert import (
-        _read_manifest,
+        MANIFEST_FILE,
     )
 
     monkeypatch.setenv("SPARK_GRAFT_SINK_GC_GRACE", "0")
@@ -1009,7 +1012,7 @@ def test_mor_compaction_folds_deltas(spark, tmp_path, monkeypatch):
     n = compact_keyed_table(spark, path)
     assert n > 0
     spark.catalog.refreshByPath(path)
-    m = _read_manifest(path)
+    m = MF.read(path, MANIFEST_FILE)
     assert all(len(fs) == 1 for fs in m["live"].values()), m["live"]
     after = {r["k"]: r["v"] for r in read_keyed_table(spark, path).collect()}
     assert after == before
@@ -1117,7 +1120,7 @@ def test_mor_delta_survives_cow_in_other_bucket(spark, tmp_path, monkeypatch):
     from es_household_retention_spark_job_spark.sinks.upsert import (
         SEQ_COL,
         _read_layout,
-        _read_manifest,
+        MANIFEST_FILE,
         _stored_schema,
     )
 
@@ -1165,7 +1168,7 @@ def test_mor_delta_survives_cow_in_other_bucket(spark, tmp_path, monkeypatch):
 
     compact_keyed_table(spark, path)
     spark.catalog.refreshByPath(path)
-    assert not _read_manifest(path).get("mor")
+    assert not MF.read(path, MANIFEST_FILE).get("mor")
     assert SEQ_COL not in [
         f.name for f in _stored_schema(_read_layout(path)).fields
     ]
@@ -1181,7 +1184,7 @@ def test_mor_insert_into_empty_bucket_compacts(spark, tmp_path, monkeypatch):
     from es_household_retention_spark_job_spark.sinks.upsert import (
         SEQ_COL,
         _read_layout,
-        _read_manifest,
+        MANIFEST_FILE,
         _stored_schema,
         compact_keyed_table,
     )
@@ -1206,12 +1209,12 @@ def test_mor_insert_into_empty_bucket_compacts(spark, tmp_path, monkeypatch):
         key="k",
         n_buckets=n,
     )
-    m = _read_manifest(path)
+    m = MF.read(path, MANIFEST_FILE)
     d3 = f"_bucket=3"
     assert m["live"][d3] == m["mor"][d3] and len(m["live"][d3]) == 1
     assert compact_keyed_table(spark, path) >= 1
     spark.catalog.refreshByPath(path)
-    assert not _read_manifest(path).get("mor")
+    assert not MF.read(path, MANIFEST_FILE).get("mor")
     assert SEQ_COL not in [
         f.name for f in _stored_schema(_read_layout(path)).fields
     ]
@@ -1241,7 +1244,7 @@ def test_delete_keys_cow(spark, tmp_path):
     physically gone at commit; absent keys are a no-op; versioned like
     any publish (time travel to the pre-delete version still serves)."""
     from es_household_retention_spark_job_spark.sinks.upsert import (
-        _read_manifest,
+        MANIFEST_FILE,
         current_version,
         delete_keys,
     )
@@ -1263,7 +1266,7 @@ def test_delete_keys_cow(spark, tmp_path):
     got = {r["k"] for r in read_keyed_table(spark, path).collect()}
     assert "k3" not in got and "k7" not in got and len(got) == 48
     # physically gone: the raw live files contain no trace of the keys
-    m = _read_manifest(path)
+    m = MF.read(path, MANIFEST_FILE)
     raw = spark.read.parquet(
         *[f"{path}/{d}/{f}" for d, fs in m["live"].items() for f in fs]
     )
@@ -1281,7 +1284,7 @@ def test_delete_keys_mor_tombstones(spark, tmp_path, monkeypatch):
     from es_household_retention_spark_job_spark.sinks.upsert import (
         SEQ_COL,
         _read_layout,
-        _read_manifest,
+        MANIFEST_FILE,
         _stored_schema,
         compact_keyed_table,
         delete_keys,
@@ -1297,14 +1300,14 @@ def test_delete_keys_mor_tombstones(spark, tmp_path, monkeypatch):
         key="k",
         n_buckets=4,
     )
-    m0 = _read_manifest(path)
+    m0 = MF.read(path, MANIFEST_FILE)
     base_files = {d: list(fs) for d, fs in m0["live"].items()}
 
     monkeypatch.setenv("SPARK_GRAFT_SINK_WRITE_MODE", "mor")
     assert delete_keys(
         spark, path, spark.createDataFrame([("k3",), ("k7",)], "k string")
     ) == 2
-    m1 = _read_manifest(path)
+    m1 = MF.read(path, MANIFEST_FILE)
     for d, fs in base_files.items():
         assert set(fs) <= set(m1["live"][d])  # nothing rewritten
     assert not m1["garbage"]
@@ -1326,11 +1329,11 @@ def test_delete_keys_mor_tombstones(spark, tmp_path, monkeypatch):
     # compaction: tombstoned bytes die, internal cols leave the schema
     assert compact_keyed_table(spark, path) > 0
     spark.catalog.refreshByPath(path)
-    assert not _read_manifest(path).get("mor")
+    assert not MF.read(path, MANIFEST_FILE).get("mor")
     assert SEQ_COL not in [
         f.name for f in _stored_schema(_read_layout(path)).fields
     ]
-    m2 = _read_manifest(path)
+    m2 = MF.read(path, MANIFEST_FILE)
     raw = spark.read.parquet(
         *[f"{path}/{d}/{f}" for d, fs in m2["live"].items() for f in fs]
     )
@@ -1937,7 +1940,7 @@ def test_cdc_sidecar_gc_and_fallback(spark, tmp_path, monkeypatch):
             key="k",
             n_buckets=n,
         )
-    man = U._read_manifest(path)
+    man = MF.read(path, U.MANIFEST_FILE)
     retained = {str(v) for v in U._snapshot_versions(path)}
     assert set(man["cdc"]) <= retained  # pruned in sync with retention
     cdc_dir = _os.path.join(path, U.CDC_DIR)
@@ -1967,7 +1970,7 @@ def test_cdc_sidecar_gc_and_fallback(spark, tmp_path, monkeypatch):
         n_buckets=n,
     )
     monkeypatch.delenv("SPARK_GRAFT_SINK_CDC")
-    assert str(U.current_version(path)) not in U._read_manifest(path).get(
+    assert str(U.current_version(path)) not in MF.read(path, U.MANIFEST_FILE).get(
         "cdc", {}
     )  # the forced-off version really is uncaptured — the fallback fires
     got = sorted(
@@ -2143,7 +2146,7 @@ def test_cow_capture_tier_under_default_mode(spark, tmp_path, monkeypatch):
         n_buckets=n,
     )
     delete_keys(spark, path, spark.createDataFrame([("k3",)], "k string"))
-    man = U._read_manifest(path)
+    man = MF.read(path, U.MANIFEST_FILE)
     assert set(man.get("cdc", {})) == {
         str(v) for v in range(v0 + 1, U.current_version(path) + 1)
     }  # every CoW publish captured
@@ -2273,7 +2276,7 @@ def test_point_lookup_skips_nonoverlapping_deltas(spark, tmp_path, monkeypatch):
         key="k",
         n_buckets=n,
     )
-    man = U._read_manifest(path)
+    man = MF.read(path, U.MANIFEST_FILE)
     d = f"{U.BUCKET_COL}=0"
     assert man["mor"].get(d)  # the bucket is genuinely dirty
     st = man.get("mor_stats", {}).get(d, {})
@@ -2324,7 +2327,7 @@ def test_point_lookup_bloom_skips_in_range_absent_probes(spark, tmp_path, monkey
         key="k",
         n_buckets=n,
     )
-    man = U._read_manifest(path)
+    man = MF.read(path, U.MANIFEST_FILE)
     d = f"{U.BUCKET_COL}=0"
     assert man["mor"].get(d)
     bl = man.get("mor_bloom", {}).get(d, {})
@@ -2367,7 +2370,7 @@ def test_point_lookup_bloom_skips_in_range_absent_probes(spark, tmp_path, monkey
                 key="k",
                 n_buckets=n,
             )
-            m2 = U._read_manifest(p2)
+            m2 = MF.read(p2, U.MANIFEST_FILE)
             assert not m2.get("mor_bloom")
             got = {r["k"]: r["v"] for r in read_keyed_table(spark, p2, keys=[3, 4]).collect()}
             assert got == {3: 3, 4: -4}

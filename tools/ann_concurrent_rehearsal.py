@@ -35,6 +35,8 @@ sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from es_household_retention_spark_job_spark import manifest as MF  # noqa: E402
+
 K = 5
 RECALL_FLOOR = 0.9
 N_PROBE = 8
@@ -105,7 +107,7 @@ def main() -> None:
     all_ok = True
     try:
         for i in range(iters):
-            man = S._read_ann_manifest(idx) or {}
+            man = MF.read(idx, S.ANN_MANIFEST) or {}
             cents = S._read_centroids(spark, idx, man)
             consistent = len(cents) == int(man.get("n_cells", len(cents)))
             got = {

@@ -44,6 +44,7 @@ sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from es_household_retention_spark_job_spark import manifest as MF  # noqa: E402
 from es_household_retention_spark_job_spark.operators import (  # noqa: E402
     similarity as S,
 )
@@ -57,7 +58,7 @@ ID_OFFSET = 10_000_000
 def probe_rows(spark, idx: str, queries, n_probe: int) -> int:
     """Rows the batch's probe-union cells hold — the scan cost a query
     pays, from the manifest ledger (no data read)."""
-    manifest = S._read_ann_manifest(idx)
+    manifest = MF.read(idx, S.ANN_MANIFEST)
     cents = S._read_centroids(spark, idx, manifest)
     union = {
         r["_c"]

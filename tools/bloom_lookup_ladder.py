@@ -36,6 +36,7 @@ sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from es_household_retention_spark_job_spark import manifest as MF  # noqa: E402
 from es_household_retention_spark_job_spark.session import get_spark  # noqa: E402
 from es_household_retention_spark_job_spark.sinks import upsert as U  # noqa: E402
 
@@ -88,7 +89,7 @@ def main() -> None:
         lambda: U.upsert_parquet(spark, path, delta, key="k", n_buckets=16),
         reps=1,
     )
-    man = U._read_manifest(path)
+    man = MF.read(path, U.MANIFEST_FILE)
     n_bloomed = sum(len(v) for v in (man.get("mor_bloom") or {}).values())
     n_dirty = len(man.get("mor") or {})
     # probes: ODD keys — absent from table AND delta... absent-from-table

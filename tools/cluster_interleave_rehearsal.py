@@ -35,6 +35,8 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from es_household_retention_spark_job_spark import manifest as MF  # noqa: E402
+
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = "/root/repo/artifacts/cluster_interleave_r12.jsonl"
 
@@ -160,7 +162,7 @@ def main() -> None:
     )
     # band-index rebuild mid-stream (must carry the cursor)
     D.build_neardup_index(U.read_keyed_table(spark, table), idx)
-    meta = D._read_neardup_meta(idx)
+    meta = MF.read(idx, D.NEARDUP_META)
     carried = meta.get("last_epoch") == last_to["band"]
     ok_all = ok_all and carried
     lines.append({"step": "band-rebuild", "cursor_carried": carried})

@@ -37,6 +37,7 @@ sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from es_household_retention_spark_job_spark import manifest as MF  # noqa: E402
 from es_household_retention_spark_job_spark.session import get_spark  # noqa: E402
 from es_household_retention_spark_job_spark.sinks.upsert import (  # noqa: E402
     choose_compaction,
@@ -108,7 +109,7 @@ def main() -> None:
                 )
                 import es_household_retention_spark_job_spark.sinks.upsert as U
 
-                dirty = len((U._read_manifest(path) or {}).get("mor") or {})
+                dirty = len((MF.read(path, U.MANIFEST_FILE) or {}).get("mor") or {})
                 tot["upsert"] += t_up
                 tot["compact"] += t_cp
                 tot["read"] += t_full + t_pt
@@ -151,7 +152,7 @@ def main() -> None:
         # buckets.
         big_n = int(os.environ.get("SPARK_GRAFT_COMPACT_LADDER_BIG", "20000000"))
         from es_household_retention_spark_job_spark.sinks.upsert import (
-            _read_manifest,
+            MANIFEST_FILE,
             _with_bucket,
         )
 
@@ -182,7 +183,7 @@ def main() -> None:
                 )
             )
             chosen = choose_compaction(path)
-            man = _read_manifest(path) or {}
+            man = MF.read(path, MANIFEST_FILE) or {}
             dirty = sorted(
                 int(d.split("=", 1)[1]) for d in (man.get("mor") or {})
             )

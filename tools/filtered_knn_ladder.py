@@ -44,6 +44,8 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from es_household_retention_spark_job_spark import manifest as MF  # noqa: E402
+
 SFS = sys.argv[1:] or ["/root/testdata/sf0.1", "/tmp/sf1"]
 K = 5
 N_QUERIES = 40
@@ -116,7 +118,7 @@ def main() -> None:
         queries = embs.where(FIXED_PRED("vec_id"))
         idx = os.path.join(tempfile.mkdtemp(prefix="filtered_knn_"), "idx")
         S.build_ann_index(embs, idx, n_cells=n_cells)
-        manifest = S._read_ann_manifest(idx)
+        manifest = MF.read(idx, S.ANN_MANIFEST)
         n_live = sum(S._manifest_cell_rows(spark, idx, manifest).values())
         for name, pred in REGIMES:
             allowed = embs.where(pred()).select("vec_id")

@@ -39,6 +39,8 @@ sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from es_household_retention_spark_job_spark import manifest as MF  # noqa: E402
+
 K = 5
 
 
@@ -87,7 +89,7 @@ def main() -> None:
         """Byte-equality vs a fresh build over the resolved table at the
         index's own current centroids — catches wedges, double-applies,
         and half-visible maintenance alike."""
-        man = S._read_ann_manifest(ei)
+        man = MF.read(ei, S.ANN_MANIFEST)
         cents = S._read_centroids(spark, ei, man)
         reb_n[0] += 1
         reb = str(root / f"reb{reb_n[0]}")
@@ -106,7 +108,7 @@ def main() -> None:
         assert out["to"] == U.current_version(et), (tag, out)
         if maint is not None:
             maint()
-        man = S._read_ann_manifest(ei)
+        man = MF.read(ei, S.ANN_MANIFEST)
         # the maintenance commit carried the cursor (wedge guard): a
         # dropped cursor would make the NEXT sync raise from_version
         assert int(man["last_epoch"]) == out["to"], (tag, man.get("last_epoch"))
@@ -149,13 +151,16 @@ def main() -> None:
     # --- the optimistic-commit guard, deterministically: a maintenance
     # op that planned from a manifest the sync has since moved past MUST
     # abort loudly, and the retry (fresh plan) must succeed
-    stale = S._read_ann_manifest(ei)
+    stale = MF.read(ei, S.ANN_MANIFEST)
     mutate(8)
     sync_ann_index(spark, ei, et)
     guard_fired = False
     try:
-        S._commit_ann_manifest(
-            ei, stale, {**stale, "version": int(stale["version"]) + 1}
+        MF.commit(
+            ei,
+            S.ANN_MANIFEST,
+            {**stale, "version": int(stale["version"]) + 1},
+            planned_from=stale,
         )
     except ConcurrentWriteError:
         guard_fired = True

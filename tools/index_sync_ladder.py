@@ -49,6 +49,8 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from es_household_retention_spark_job_spark import manifest as MF  # noqa: E402
+
 ARGS = [a for a in sys.argv[1:] if not a.startswith("--")]
 SFS = ARGS or ["/root/testdata/sf0.1", "/tmp/sf1", "/tmp/sf10"]
 ROUNDS = 2
@@ -118,7 +120,7 @@ def main() -> None:
             SE.build_text_index(U.read_keyed_table(spark, dt), di)
             D.build_neardup_index(U.read_keyed_table(spark, dt), ndi)
         S.build_ann_index(U.read_keyed_table(spark, et), ei, n_cells=N_CELLS)
-        man = S._read_ann_manifest(ei)
+        man = MF.read(ei, S.ANN_MANIFEST)
         cents = S._read_centroids(spark, ei, man)
         n_docs = 0 if ANN_ONLY else docs.count()
         n_embs = embs.count()

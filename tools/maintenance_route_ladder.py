@@ -37,6 +37,8 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from es_household_retention_spark_job_spark import manifest as MF  # noqa: E402
+
 SFS = [a for a in sys.argv[1:] if not a.startswith("--")] or [
     "/root/testdata/sf0.1",
     "/tmp/sf10",
@@ -168,7 +170,7 @@ def main() -> None:
                     SE.bm25_search_indexed(spark, paths[kind], qs, k=10)
                 ) == res(SE.bm25_search_indexed(spark, reb, qs, k=10))
             elif kind == "ann":
-                man = S._read_ann_manifest(paths[kind])
+                man = MF.read(paths[kind], S.ANN_MANIFEST)
                 queries = embs.orderBy("vec_id").limit(100)
                 equal = res(
                     S.knn_ivf_indexed(

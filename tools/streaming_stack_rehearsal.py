@@ -42,6 +42,8 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F, types as T  # noqa: E402
 
+from es_household_retention_spark_job_spark import manifest as MF  # noqa: E402
+
 ARGS = [a for a in sys.argv[1:] if not a.startswith("--")]
 SF = ARGS[0] if ARGS else "/root/testdata/sf0.1"
 N_BATCHES = int(ARGS[1]) if len(ARGS) > 1 else 3
@@ -183,7 +185,7 @@ def main() -> None:
         )
         # FULL-probe read (n_probe = live cell count — auto-split may
         # have grown it) is the exactness gate vs brute force
-        n_cells_live = int(S._read_ann_manifest(aidx)["n_cells"])
+        n_cells_live = int(MF.read(aidx, S.ANN_MANIFEST)["n_cells"])
         ann_ok = {
             (r.query_id, r.neighbor_id, r.rank, r.cos_bp)
             for r in S.knn_ivf_indexed(
